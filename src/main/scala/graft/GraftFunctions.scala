@@ -2,7 +2,8 @@ package graft
 
 import graft.agg._
 import graft.functions._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, GraftColumns, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
@@ -113,22 +114,12 @@ object GraftFunctions {
         longArg(es(3), "seed"), mergeInput = true)
     },
     "graft_bloom_contains" -> { es => BloomContains(es.head, es(1)) },
-    // analysis-time token resolution, same route as the interleaved blob
-    "graft_bloom_contains_bcast" -> { es =>
-      BloomContainsBcast(IxfBlobs.get(arg(es.head, "token").toString), es(1))
-    },
     "graft_bloom_count_contained" -> { es =>
       BloomCountContained(es.head, es(1))
     },
     "graft_bloom_fpp" -> { es => BloomFpp(es.head) },
     "graft_bloom_items_estimate" -> { es => BloomItemsEstimate(es.head) },
     "graft_ixf_count_contained" -> { es => IxfCountContained(es.head, es(1)) },
-    // builder runs during ANALYSIS on the driver: the token literal resolves
-    // to a Broadcast handle there, and only the stub reaches executors
-    "graft_ixf_count_contained_bcast" -> { es =>
-      IxfCountContainedBcast(
-        IxfBlobs.get(arg(es.head, "token").toString), es(1))
-    },
     "graft_cms_agg" -> { es =>
       CmsAgg(es.head, doubleArg(es(1), "eps"), doubleArg(es(2), "delta"),
         longArg(es(3), "seed"))
@@ -273,29 +264,21 @@ object GraftFunctions {
     call_function("graft_bloom_merge_agg", c, lit(items), lit(fpp), lit(seed))
   def bloom_contains_hashed(sketch: Column, hash: Column): Column =
     call_function("graft_bloom_contains", sketch, hash)
-  /** Membership probe against a broadcast-registered blob (IxfBlobs token);
-    * for blobs above IxfBlobs.LiteralMaxBytes — see bloom_contains_routed
-    * for the size-aware chooser. */
-  def bloom_contains_bcast(token: String, hash: Column): Column =
-    call_function("graft_bloom_contains_bcast", lit(token), hash)
-  /** Size-aware scalar-blob routing (the measured SURVEY §9 boundary):
-    * small blobs embed as binary LITERALS (probed in place, zero per-row
-    * copies); blobs above IxfBlobs.LiteralMaxBytes travel as a
-    * TorrentBroadcast handle resolved at analysis time — a multi-MB
-    * Literal is re-hashed per Catalyst tree compare and re-serialized into
-    * every stage's task binary. The broadcast route registers a token that
-    * stays live until `release()` is called; callers should release as
-    * soon as every plan embedding the column is CONSTRUCTED (Dataset
-    * analysis is eager, so construction resolves the token into the plan). */
+  /** Measured routing boundary for scalar sketch blobs (SURVEY §9): below
+    * it a binary Literal is optimal (probed in place from the codegen
+    * references array, rides the task binary once); above it the Literal's
+    * per-tree-compare re-hash and per-stage re-serialization dominate. */
+  val LiteralMaxBytes: Int = 1 << 20
+  /** Size-aware scalar-blob routing: blobs up to [[LiteralMaxBytes]] embed
+    * as binary literals; larger ones travel as a TorrentBroadcast handle
+    * held by the expression itself (a stub in the task binary; executors
+    * fetch the blocks once, and ContextCleaner reclaims them when the plan
+    * is unreferenced). */
   def bloom_contains_routed(
-      spark: SparkSession, blob: Array[Byte],
-      hash: Column): (Column, () => Unit) =
-    if (blob.length <= IxfBlobs.LiteralMaxBytes)
-      (bloom_contains_hashed(lit(blob), hash), () => ())
-    else {
-      val token = IxfBlobs.register(spark, blob)
-      (bloom_contains_bcast(token, hash), () => IxfBlobs.unregister(token))
-    }
+      spark: SparkSession, blob: Array[Byte], hash: Column): Column =
+    if (blob.length <= LiteralMaxBytes) bloom_contains_hashed(lit(blob), hash)
+    else GraftColumns.column(BloomContainsBcast(
+      spark.sparkContext.broadcast(blob), GraftColumns.expression(hash)))
   def bloom_contains(sketch: Column, value: Column): Column =
     bloom_contains_hashed(sketch, xxhash64(value))
   def bloom_count_contained(sketch: Column, hashes: Column): Column =
@@ -305,8 +288,11 @@ object GraftFunctions {
     call_function("graft_bloom_items_estimate", sketch)
   def ixf_count_contained(blob: Column, hashes: Column): Column =
     call_function("graft_ixf_count_contained", blob, hashes)
-  def ixf_count_contained_bcast(token: String, hashes: Column): Column =
-    call_function("graft_ixf_count_contained_bcast", lit(token), hashes)
+  /** [[ixf_count_contained]] against a broadcast interleaved blob. */
+  def ixf_count_contained_bcast(
+      blob: Broadcast[Array[Byte]], hashes: Column): Column =
+    GraftColumns.column(
+      IxfCountContainedBcast(blob, GraftColumns.expression(hashes)))
 
   def cms_agg(c: Column, eps: Double = 0.0001, delta: Double = 0.01,
       seed: Long = DefaultSeed): Column =

@@ -185,8 +185,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("hll_distinct_users")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One entry per implemented operator from SURVEY.md §2; every gate
+    * runs with the graft functions registered in its session. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map { case (name, gate) =>
+      name -> { (s: SparkSession, dir: String) =>
+        GraftFunctions.register(s)
+        gate(s, dir)
+      }
+    }
+
+  private def gates: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- baseline relational (A1/A12, F2/A4, J1) --------------------------
     "q01_pricing_summary" -> { (s, dir) =>
       t(s, dir, "lineitem")
@@ -224,7 +233,6 @@ object SparkEntry {
     // discarded by the join itself, so the result is EXACT: byte-equality
     // oracle against the plain join.
     "join_bloom_pruned" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey").as("orderkey"), col("l_quantity"))
       val ords = t(s, dir, "orders")
@@ -256,7 +264,6 @@ object SparkEntry {
     },
     // ---- sketch bound checks (S5/A2, S3/A3, S1/S2/S4, quantiles) ----------
     "hll_distinct_users" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val p = 14
       t(s, dir, "events")
         .groupBy("event_type")
@@ -270,7 +277,6 @@ object SparkEntry {
         .orderBy("event_type")
     },
     "cms_event_type_counts" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val eps = 0.0005
       val ev = t(s, dir, "events")
       val sk = ev.agg(cms_agg(col("event_type"), eps, 0.01).as("cms"))
@@ -286,7 +292,6 @@ object SparkEntry {
         .orderBy("event_type")
     },
     "bloom_membership" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val fpp = 0.01
       val members = t(s, dir, "orders").select(col("o_custkey")).distinct()
       val nMembers = members.count()
@@ -310,7 +315,6 @@ object SparkEntry {
     },
     // two jobs total: one sketch pass, one fused rank-check pass
     "kll_price_quantiles" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val li = t(s, dir, "lineitem").select(col("l_extendedprice").as("x"))
       val kll = graft.sketch.Kll.fromBytes(
         li.agg(kll_agg(col("x"), 200)).first().getAs[Array[Byte]](0))
@@ -326,7 +330,6 @@ object SparkEntry {
       }.toDF("q_label", "within_rank_error").orderBy("q_label")
     },
     "tdigest_value_quantiles" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val ev = t(s, dir, "events").select(col("value").as("x"))
         .where(col("x").isNotNull)
       val td = graft.sketch.TDigest.fromBytes(
@@ -352,7 +355,6 @@ object SparkEntry {
     // estimate gates as a bound boolean (t-digest bytes are partition-order
     // sensitive, same posture as tdigest_value_quantiles).
     "tdigest_trimmed_mean" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val li = t(s, dir, "lineitem").select(col("l_extendedprice").as("x"))
       // ONE pass for the digest AND the row count (the count rode a second
       // full scan; partial build/merge order — and so the blob — unchanged)
@@ -389,7 +391,6 @@ object SparkEntry {
     // (never-undercount; overcount ≤ eps·|A|·|B|). Deterministic: CMS
     // counters are exact integer sums independent of partitioning.
     "cms_join_size" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val li = t(s, dir, "lineitem")
       val a = li.where(col("l_linenumber") <= 3).select(col("l_orderkey").as("k"))
       val b = li.where(col("l_linenumber") >= 4).select(col("l_orderkey").as("k"))
@@ -409,7 +410,6 @@ object SparkEntry {
     // rank-error slack. Side B is a genuinely shifted distribution derived
     // per-row with IEEE-identical ops (×2.0 exact, +10.0 same rounding).
     "kll_ks_distance" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val ev = t(s, dir, "events")
       val a = ev.where(col("event_type") === "click")
         .select(col("value").as("x"))
@@ -440,7 +440,6 @@ object SparkEntry {
     // engines (boundaries dumped for the oracle), each bucket's mass
     // within the rank-error slack of n/B.
     "range_equidepth" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val li = t(s, dir, "lineitem").select(col("l_extendedprice").as("x"))
       val buckets = 8
       val bounds = RangeLayout.equiDepthBounds(li, "x", buckets)
@@ -464,7 +463,6 @@ object SparkEntry {
     // 0.12 drift threshold is safe on both sides, so the estimate-based
     // `drifted` flag equals the oracle's exact-KS flag deterministically.
     "kll_ks_grouped" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val ev = t(s, dir, "events")
         .select(col("event_type").as("g"), col("value").as("x"))
       val after = ev.select(col("g"),
@@ -509,7 +507,6 @@ object SparkEntry {
     // slack, so the exact-count flags the oracle computes match the
     // estimate-based flags deterministically.
     "cms_heavy_change" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val ev = t(s, dir, "events")
       val before = ev.select(col("event_type").as("k"))
       val after = ev.where(col("event_type") =!= "click")
@@ -521,7 +518,6 @@ object SparkEntry {
     },
     // ---- taxor search analogue (S2/S3, F2/F3, J1) -------------------------
     "classify_exact" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val (corpus, qs) = corpusQueries(s, dir)
       Classify.exact(corpus, qs, shingleK = 8, minFraction = 0.1)
         .orderBy("query_id", "group")
@@ -531,7 +527,6 @@ object SparkEntry {
     // same closed-form constants (q, z, affine variance A·n+B) so the
     // filter is byte-identical across engines.
     "classify_kmer_ci" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val (corpus, qs) = corpusQueries(s, dir)
       Classify.exactCI(corpus, qs,
           graft.functions.Thresholds.KmerCI(8, 0.02), shingleK = 8)
@@ -546,30 +541,25 @@ object SparkEntry {
     // THRESHOLD model, not the tokenizer — syncmer tokenization itself is
     // spec-gated in SyncmerPropsSpec.)
     "classify_syncmer_ci" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val (corpus, qs) = corpusQueries(s, dir)
       Classify.exactCI(corpus, qs,
           graft.functions.Thresholds.SyncmerTable(12, 0.1), shingleK = 12)
         .orderBy("query_id", "group")
     },
     "classify_bloom_bounds" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val (corpus, qs) = corpusQueries(s, dir)
       val fpp = 0.0039
-      // ONE corpus shingle explode+distinct feeds BOTH strategies: the
-      // exact inverted join and the salted Bloom build (bit-OR idempotence
-      // ⇒ byte-identical filters from the distinct table). Persisted
+      // ONE corpus shingle explode feeds BOTH strategies: the exact
+      // inverted join and the salted Bloom build (bit-OR idempotence ⇒ the
+      // raw explode builds the same filters as its distinct). Persisted
       // because the final plan references it from both sides; left cached
-      // for the bench action (hierarchicalSketch posture).
+      // for the bench action.
       val groupSh = Classify.groupShingles(corpus)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val querySh = qs
-        .select(col("query_id"), explode(shingles(col("text"), 8)).as("h"))
-        .distinct()
-      val exact = Classify.exactCountsFromShingles(groupSh, querySh)
+      val exact = Classify.exactCounts(groupSh, Classify.queryShingles(qs))
         .withColumnRenamed("match_cnt", "exact_cnt")
-      val bloom = Classify.sketchCountsWithFilters(
-          Classify.buildFiltersFromShingles(groupSh, fpp = fpp), qs)
+      val bloom = Classify.sketchCounts(
+          Classify.buildFilters(groupSh, fpp = fpp), qs)
         .select(col("query_id"), col("group"), col("match_cnt").as("bloom_cnt"))
       exact.join(bloom, Seq("query_id", "group"))
         .select(col("query_id"), col("group"), col("exact_cnt"),
@@ -583,16 +573,15 @@ object SparkEntry {
     // provably lossless (bucket filter bits = OR of member bits), so the
     // two-level result must equal the flat broadcast probe EXACTLY.
     "classify_hixf" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val (corpus, qs) = corpusQueries(s, dir)
       val cols = Seq("query_id", "group", "match_cnt", "query_n")
       // ONE salted filter build shared by both probe strategies — the build
       // dominates the cost; flat vs two-level results provably identical
-      val filters = Classify.buildFilters(corpus)
+      val filters = Classify.buildFilters(Classify.groupShingles(corpus))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val flat = Classify.sketchWithFilters(filters, qs, minFraction = 0.1)
+      val flat = Classify.sketch(filters, qs, minFraction = 0.1)
         .select(cols.map(col): _*).cache()
-      val hier = Classify.hierarchicalSketchWithFilters(filters, qs,
+      val hier = Classify.hierarchicalSketch(filters, qs,
           minFraction = 0.1, nBuckets = 16)
         .select(cols.map(col): _*).cache()
       // the two probe strategies are independent DAGs over the shared
@@ -613,14 +602,13 @@ object SparkEntry {
     // counts from a single pass per query. Same bits as the flat probe ⇒
     // provably identical output, asserted here on the shared build.
     "classify_interleaved" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val (corpus, qs) = corpusQueries(s, dir)
       val cols = Seq("query_id", "group", "match_cnt", "query_n")
-      val filters = Classify.buildFilters(corpus)
+      val filters = Classify.buildFilters(Classify.groupShingles(corpus))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val flat = Classify.sketchWithFilters(filters, qs, minFraction = 0.1)
+      val flat = Classify.sketch(filters, qs, minFraction = 0.1)
         .select(cols.map(col): _*).cache()
-      val ixf = Classify.interleavedSketchWithFilters(filters, qs,
+      val ixf = Classify.interleavedSketch(filters, qs,
           minFraction = 0.1)
         .select(cols.map(col): _*).cache()
       // independent probe DAGs over the shared cached build (guide §2.6)
@@ -703,7 +691,6 @@ object SparkEntry {
     // band miss is negligible for any data regen/seed; the 0.5-threshold
     // regime stays covered by DedupSpec's recall assertions.
     "dedup_minhash_lsh" -> { (s, dir) =>
-      GraftFunctions.register(s)
       Dedup.minhashLshPairs(docsPar(s, dir), "doc_id", "text",
           shingleK = 8, numBands = 32, rowsPerBand = 4, threshold = 0.5)
         .where(col("jaccard") >= 0.7)
@@ -720,7 +707,6 @@ object SparkEntry {
     // component, so the gate margin is tighter here; 0.7-threshold
     // behavior stays covered by OperatorsSpec.
     "dedup_neardup_canonical" -> { (s, dir) =>
-      GraftFunctions.register(s)
       Dedup.nearDupCanonical(docsPar(s, dir), "doc_id", "text",
           shingleK = 8, numBands = 32, rowsPerBand = 4, threshold = 0.8)
         .orderBy("doc_id")
@@ -729,7 +715,6 @@ object SparkEntry {
     // deterministic 1-in-3 sample partition (blocking); the full corpus is
     // covered by the LSH path above, which exactJaccardPairs cross-checks.
     "dedup_ngram_jaccard" -> { (s, dir) =>
-      GraftFunctions.register(s)
       Dedup.exactJaccardPairs(
           docsPar(s, dir).where(pmod(col("doc_id"), lit(3)) === 0),
           "doc_id", "text", shingleK = 8, threshold = 0.5)
@@ -748,7 +733,6 @@ object SparkEntry {
     //  - recall floor 0.4 vs the base (observed 0.76; hamming<=3 is
     //    strict, so full recall is not expected).
     "dedup_simhash" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val docs = docsPar(s, dir)
       val sim = Dedup.simhashPairs(docs, "doc_id", "text",
           shingleK = 8, maxHamming = 3).select("id_a", "id_b").cache()
@@ -772,7 +756,6 @@ object SparkEntry {
     },
     // ---- similarity search -------------------------------------------------
     "ann_topk" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val corpus = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
       val qs = emb.where(pmod(col("vec_id"), lit(25)) === 0)
@@ -789,7 +772,6 @@ object SparkEntry {
     //    (sim ~0.99) must find their source in top-5, floor 0.9 — where
     //    ANN SHOULD succeed, it must (measured: 1.0 for both).
     "ann_recall_floor" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val corpus = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
       val qs = emb.where(pmod(col("vec_id"), lit(25)) === 0)
@@ -838,7 +820,6 @@ object SparkEntry {
     // int8-quantized brute force vs float32: 4× less embedding data for a
     // small recall cost (measured 0.99 recall@5 at sf0.01; floor 0.9)
     "ann_q8_recall" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val corpus = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
       val qs = emb.where(pmod(col("vec_id"), lit(25)) === 0)
@@ -882,7 +863,6 @@ object SparkEntry {
     // miss is ~7e-7 per pair. cosineNearDupPairs at threshold 0.9 must
     // recover >= 90% of the planted (id, id+1e6) pairs.
     "cosine_neardup_lsh" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
       val copies = emb.where(pmod(col("id"), lit(25)) === 3)
@@ -914,7 +894,6 @@ object SparkEntry {
     // counts — separated centroids remove the failure mode, as the
     // operator scaladoc documents for production.)
     "semdedup_embeddings" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
       val copies = emb.where(pmod(col("id"), lit(25)) === 3)
@@ -988,7 +967,6 @@ object SparkEntry {
     // corpus to the same centroids (checked-equality gate, classify_hixf
     // style) and that the recorded drift fraction is a valid fraction.
     "ann_index_append" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
       val idx = java.nio.file.Files
@@ -1027,7 +1005,6 @@ object SparkEntry {
     // cell into a single file, probe again — the oracle re-reads the dump,
     // so a MATCH proves the rewrite was pure layout.
     "ann_index_compaction" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
       val idx = java.nio.file.Files
@@ -1048,13 +1025,11 @@ object SparkEntry {
     },
     // ---- text analysis -----------------------------------------------------
     "text_doc_stats" -> { (s, dir) =>
-      GraftFunctions.register(s)
       TextStats.docStats(t(s, dir, "documents"), "doc_id", "text")
         .drop("fingerprint")
         .orderBy("doc_id")
     },
     "text_quality" -> { (s, dir) =>
-      GraftFunctions.register(s)
       TextStats.qualityFlags(t(s, dir, "documents"), "doc_id", "text")
         .orderBy("doc_id")
     },
@@ -1065,7 +1040,6 @@ object SparkEntry {
     // and the top-2-gram character fraction are then non-vacuous and gate
     // byte-exact.
     "text_repetition" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val derived = docsPar(s, dir).select(col("doc_id"),
         replace(replace(col("text"), lit(" the "), lit("\n\n")),
           lit(" "), lit("\n")).as("text"))
@@ -1077,7 +1051,6 @@ object SparkEntry {
     // floating log to diverge between engines); top-3 terms per doc,
     // byte-exact against the DuckDB mirror.
     "text_top_terms" -> { (s, dir) =>
-      GraftFunctions.register(s)
       TextStats.topTerms(docsPar(s, dir), "doc_id", "text",
           k = 3, minLen = 3)
         .orderBy("doc_id", "rk")
@@ -1283,7 +1256,6 @@ object SparkEntry {
     // north-star "heavy hitters per turn window": CMS over (hour, type)
     // composite keys, eps-bounded against the exact windowed counts.
     "cms_windowed_counts" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val eps = 0.0005
       val delta = 0.01
       val keyed = t(s, dir, "events")
@@ -1322,7 +1294,6 @@ object SparkEntry {
     //  - undercount <= N/(m+1) when present, exact_cnt <= N/(m+1) if evicted.
     // All deterministic (not probabilistic) — gate every row.
     "heavy_hitters_topk" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val m = 6
       val keyed = t(s, dir, "events")
         .select(concat(lit("k"),
@@ -1350,7 +1321,6 @@ object SparkEntry {
     // hierarchy by merge. custkey is unique, so exact region distinct =
     // sum of per-nation exacts (the oracle recomputes it directly).
     "hll_rollup_merge" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val p = 14
       val perNation = t(s, dir, "customer")
         .groupBy("c_nationkey")
@@ -1374,7 +1344,6 @@ object SparkEntry {
     // The Misra–Gries bounds hold with N = total WEIGHT — deterministic,
     // gate every row (same posture as heavy_hitters_topk).
     "heavy_hitters_weighted" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val m = 6
       val keyed = t(s, dir, "events")
         .select(concat(lit("k"),
@@ -1402,7 +1371,6 @@ object SparkEntry {
     // the same deterministic per-row gate as heavy_hitters_topk applies to
     // the merged result.
     "topk_rollup_merge" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val m = 6
       val keyed = t(s, dir, "events").select(col("event_type"),
         concat(lit("k"),
@@ -1433,7 +1401,6 @@ object SparkEntry {
     // on the blobs, plus the usual no-undercount / eps-overcount bounds
     // vs exact counts.
     "cms_rollup_merge" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val eps = 0.0005
       val ev = t(s, dir, "events").select(col("event_type"),
         concat(lit("k"),
@@ -1465,7 +1432,6 @@ object SparkEntry {
     // t-digest gets a looser empirical bound (merging-digest accuracy
     // degrades ~2x vs single-pass, same posture as tdigest_value_quantiles).
     "quantile_rollup_merge" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val ev = t(s, dir, "events")
         .select(col("event_type"), col("value").cast("double").as("x"))
         .where(col("x").isNotNull)
@@ -1498,7 +1464,6 @@ object SparkEntry {
     // within the published 1.04/sqrt(m) bound (|A ∩ B| follows by
     // inclusion–exclusion — the dedup-overlap planning use).
     "hll_union_estimate" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val p = 14
       val ev = t(s, dir, "events")
       val sks = ev.groupBy("event_type").agg(hll_agg(col("user_id"), p).as("sk"))
@@ -1754,7 +1719,6 @@ object SparkEntry {
     // reproduce verbatim — byte-equality gate. token_count and the
     // DuckDB regexp-split twin are the same pair text_doc_stats gates.
     "pack_windows" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents").select(col("doc_id"), col("source"),
         GraftFunctions.token_count(col("text")).as("n_tokens"))
       Sampling.packWindows(docs, Seq("source"), "doc_id", "n_tokens", 512)
@@ -1945,7 +1909,6 @@ object SparkEntry {
     // (recomputed in-plan with the same union-of-step-points prefix sum
     // as kll_ks_distance, partitioned by day).
     "stream_ks_drift" -> { (s, dir) =>
-      GraftFunctions.register(s)
       import s.implicits._
       // clicks feeds six lineages (shift, reference blob, the streamed
       // rows, refV, nb, per-day wv): persist in the caller and leave
@@ -2035,7 +1998,6 @@ object SparkEntry {
     // is dumped for the oracle, which re-derives the cap byte-exactly;
     // assignment-kernel correctness is the ANN/semdedup gates' job.
     "sample_cluster_balanced" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
       val cents = Similarity.pickCentroids(emb, 8)
@@ -2055,7 +2017,6 @@ object SparkEntry {
     // (shared span 256 >= w + k - 1 = 23; shortest possible chunk is 33),
     // so `detected` is deterministically true — gate every row.
     "dedup_winnowed_spans" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val wp = Dedup.winnowedSpanPairs(docs, "doc_id", "text",
           shingleK = 8, window = 16)
@@ -2105,7 +2066,6 @@ object SparkEntry {
     // the gate is byte-exact INCLUDING the scaled-Jaccard estimate — no
     // LSH band-miss caveat anywhere in this path.
     "dedup_incremental" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val docs = docsPar(s, dir)
       val idx = java.nio.file.Files
         .createTempDirectory("graft-fpidx").toString
@@ -2123,7 +2083,6 @@ object SparkEntry {
     // LAYOUT (few key-clustered files) and nothing else, byte-for-byte,
     // including the Jaccard estimates.
     "dedup_index_compaction" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val docs = docsPar(s, dir)
       val idx = java.nio.file.Files
         .createTempDirectory("graft-fpidx-compact").toString
@@ -2170,7 +2129,6 @@ object SparkEntry {
     // one-shot batch result, and the oracle is the identical SQL as
     // dedup_incremental (byte-exact, estimator values included).
     "stream_dedup_index" -> { (s, dir) =>
-      GraftFunctions.register(s)
       import s.implicits._
       val docs = docsPar(s, dir)
       val idx = java.nio.file.Files
@@ -2218,7 +2176,6 @@ object SparkEntry {
     // vectors have identical SRP signatures, so every planted leak MUST
     // be caught by the banding — probability-1, not a recall floor.
     "decontaminate_semantic" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
       val evalSet = emb.where(pmod(col("id"), lit(7)) === 0)
@@ -2237,7 +2194,6 @@ object SparkEntry {
     // scan — deterministic by the winnowing guarantee (same margin as
     // dedup_winnowed_spans), gate every row.
     "decontaminate_eval" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val docs = docsPar(s, dir)
       val hits = Dedup.crossSpanContamination(
           docs.where(pmod(col("doc_id"), lit(10)) =!= 0), "doc_id",
@@ -2260,7 +2216,6 @@ object SparkEntry {
     },
     // inter-event latency quantiles from ts (lag window), t-digest bound.
     "latency_quantiles" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       val gaps = t(s, dir, "events")
         .withColumn("tsd", col("ts").cast("timestamp").cast("double"))
@@ -2282,7 +2237,6 @@ object SparkEntry {
     // S6: FracMinHash scaling — distinct-count scale-up estimate within the
     // binomial sampling bound, checked against the exact distinct count.
     "fracminhash_distinct" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val scale = 4L
       val docs = t(s, dir, "documents")
       docs.select(col("source"),
@@ -2301,7 +2255,6 @@ object SparkEntry {
     },
     // S7/S8: minimizer down-selection — sanity density bounds per document.
     "minimizer_density" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val w = 8
       t(s, dir, "documents")
         .select(col("doc_id"),
@@ -2320,7 +2273,6 @@ object SparkEntry {
     // at (k=8, s=4, t=2); gate allows 8x slack below and never exceeds the
     // number of k-gram positions.
     "syncmer_density" -> { (s, dir) =>
-      GraftFunctions.register(s)
       t(s, dir, "documents")
         .select(col("doc_id"),
           (length(col("text")) - 7).cast("long").as("n_positions"),
@@ -2344,7 +2296,6 @@ object SparkEntry {
     // DuckDB oracle reads back by absolute path (driver + oracle share the
     // box), so exact_convs is value-verified, not rows-only.
     "sketch_build_transcripts" -> { (s, dir) =>
-      GraftFunctions.register(s)
       graft.sources.Transcripts.generate(s, nConvs = 2000)
         .write.mode("overwrite").parquet(TranscriptDumpPath)
       val turns = s.read.parquet(TranscriptDumpPath)

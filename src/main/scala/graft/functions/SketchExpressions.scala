@@ -306,62 +306,11 @@ case class IxfCountContained(left: Expression, right: Expression)
   override def prettyName: String = "graft_ixf_count_contained"
 }
 
-/** Driver-side registry routing large sketch blobs into expressions as
-  * TorrentBroadcast handles instead of Literals: a multi-MB Literal is
-  * re-hashed by every Catalyst tree comparison and re-serialized into
-  * every stage's task binary, which measurably dominates planning
-  * (classify_interleaved: 15-25 s with a 12 MB literal, ~3 s broadcast).
-  * The registry lives only on the driver: GraftFunctions' builder resolves
-  * the token DURING ANALYSIS and embeds the Broadcast handle in the
-  * expression, which serializes as a stub; executors fetch blocks once.
-  *
-  * Lifecycle: callers `unregister(token)` as soon as the plan embedding
-  * the blob is constructed (Dataset analysis is eager, so the builder has
-  * already resolved the token by then) — the resolved plan's own Broadcast
-  * reference keeps the blob alive, and Spark's ContextCleaner reclaims it
-  * once the plan is unreferenced. The bounded FIFO is only the backstop
-  * for callers that leak tokens. */
-object IxfBlobs {
-  /** Measured routing boundary for SCALAR sketch blobs (SURVEY §9): below
-    * this a binary Literal is optimal (probed in place from the codegen
-    * references array, rides the task binary once); above it the Literal's
-    * per-tree-compare re-hash + per-stage re-serialization dominates and
-    * the blob must travel as a TorrentBroadcast token instead. */
-  val LiteralMaxBytes: Int = 1 << 20
-  private val MaxEntries = 64
-  private val m = new java.util.LinkedHashMap[String,
-      org.apache.spark.broadcast.Broadcast[Array[Byte]]](16, 0.75f, false) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[String,
-          org.apache.spark.broadcast.Broadcast[Array[Byte]]]): Boolean =
-      size() > MaxEntries
-  }
-  def register(
-      spark: org.apache.spark.sql.SparkSession,
-      blob: Array[Byte]): String = m.synchronized {
-    val token = java.util.UUID.randomUUID().toString
-    m.put(token, spark.sparkContext.broadcast(blob))
-    token
-  }
-  def get(token: String): org.apache.spark.broadcast.Broadcast[Array[Byte]] =
-    m.synchronized {
-      val b = m.get(token)
-      require(b != null, s"unknown blob token $token " +
-        "(unregistered, evicted or from another driver) — re-register " +
-        "the blob")
-      b
-    }
-  /** Drop the routing entry (NOT the broadcast itself — any plan already
-    * holding the handle keeps it alive; ContextCleaner reclaims it when
-    * the last reference goes). Unknown tokens are a no-op. */
-  def unregister(token: String): Unit = m.synchronized { m.remove(token) }
-  /** Number of live routing entries (spec hook for release accounting). */
-  def liveTokens: Int = m.synchronized(m.size())
-}
-
 /** Bloom membership probe against a broadcast filter blob — the large-blob
-  * twin of [[BloomContains]] (see IxfBlobs.LiteralMaxBytes for the
-  * measured literal-vs-broadcast routing boundary).
+  * twin of [[BloomContains]] (see GraftFunctions.LiteralMaxBytes for the
+  * measured literal-vs-broadcast routing boundary). The expression holds
+  * the Broadcast handle itself, so it is built as a Column through
+  * org.apache.spark.sql.GraftColumns rather than by name.
   *
   * Both eval paths resolve `Broadcast.value()` ONCE per instance, never
   * per row: `TorrentBroadcast.getValue` is synchronized, so a per-row call
@@ -389,9 +338,9 @@ case class BloomContainsBcast(
   override def prettyName: String = "graft_bloom_contains_bcast"
 }
 
-/** Bulk count against a broadcast interleaved blob (see IxfBlobs; same
-  * once-per-instance Broadcast.value resolution as [[BloomContainsBcast]]
-  * — getValue is synchronized and must stay off the per-row path). */
+/** Bulk count against a broadcast interleaved blob — built and resolved
+  * like [[BloomContainsBcast]]: Broadcast.value once per instance, since
+  * getValue is synchronized and must stay off the per-row path. */
 case class IxfCountContainedBcast(
     blob: org.apache.spark.broadcast.Broadcast[Array[Byte]],
     child: Expression) extends UnaryExpression {

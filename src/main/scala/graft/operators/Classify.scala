@@ -24,7 +24,28 @@ import org.apache.spark.sql.functions._
 object Classify {
   val RelMaxFactor = 0.8 // taxor_search.cpp:278
 
-  /** Raw exact match counts, no filters.
+  /** The (group, h) reference-shingle table both strategies build from:
+    * the raw explode, one row per shingle per corpus text. Bloom insertion
+    * is idempotent, so [[buildFilters]] takes it as is; [[exactCounts]]
+    * applies the distinct that only exact counting needs. A caller running
+    * both strategies (classify_bloom_bounds) persists it once. */
+  def groupShingles(
+      corpus: DataFrame, // (group, text)
+      shingleK: Int = 8,
+      seed: Long = DefaultSeed): DataFrame =
+    corpus.select(col("group"),
+      explode(shingles(col("text"), shingleK, seed = seed)).as("h"))
+
+  /** The (query_id, h) query-shingle table, raw explode. */
+  def queryShingles(
+      queries: DataFrame, // (query_id, text)
+      shingleK: Int = 8,
+      seed: Long = DefaultSeed): DataFrame =
+    queries.select(col("query_id"),
+      explode(shingles(col("text"), shingleK, seed = seed)).as("h"))
+
+  /** Raw exact match counts over shingle tables ([[groupShingles]],
+    * [[queryShingles]]), no thresholds.
     * Output: (query_id, group, match_cnt, query_n).
     *
     * `maxGroupDf`: skew guard for scale — a shingle present in more than
@@ -34,50 +55,19 @@ object Classify {
     * discriminative shingle universe only — a documented approximation.
     * None (default, used by the byte-equality gates) disables it. */
   def exactCounts(
-      corpus: DataFrame, // (group, text)
-      queries: DataFrame, // (query_id, text)
-      shingleK: Int = 8,
-      seed: Long = DefaultSeed,
-      maxGroupDf: Option[Long] = None): DataFrame =
-    exactCountsFromShingles(
-      groupShingles(corpus, shingleK, seed),
-      queries
-        .select(col("query_id"),
-          explode(shingles(col("text"), shingleK, seed = seed)).as("h"))
-        .distinct(),
-      maxGroupDf)
-
-  /** The distinct (group, h) reference-shingle table both classification
-    * strategies consume — exposed so a gate comparing exact vs sketch
-    * output can pay the corpus explode+distinct ONCE (persist in the
-    * caller; the buildFilters posture) instead of re-exploding the corpus
-    * per strategy. */
-  def groupShingles(
-      corpus: DataFrame, // (group, text)
-      shingleK: Int = 8,
-      seed: Long = DefaultSeed): DataFrame =
-    corpus
-      .select(col("group"),
-        explode(shingles(col("text"), shingleK, seed = seed)).as("h"))
-      .distinct()
-
-  /** [[exactCounts]] over prebuilt shingle tables: `groupSh` = distinct
-    * (group, h) ([[groupShingles]]), `querySh` = distinct (query_id, h).
-    * Same plan tail as exactCounts by construction. */
-  def exactCountsFromShingles(
-      groupSh0: DataFrame, // (group, h), distinct
-      querySh0: DataFrame, // (query_id, h), distinct
+      groupSh: DataFrame, // (group, h)
+      querySh: DataFrame, // (query_id, h)
       maxGroupDf: Option[Long] = None): DataFrame = {
-    val (groupSh, querySh) = maxGroupDf match {
+    val (g0, q0) = (groupSh.distinct(), querySh.distinct())
+    val (g, q) = maxGroupDf match {
       case Some(cap) =>
-        val hot = groupSh0.groupBy("h").agg(count(lit(1)).as("__df"))
+        val hot = g0.groupBy("h").agg(count(lit(1)).as("__df"))
           .where(col("__df") > cap).select("h")
-        (groupSh0.join(hot, Seq("h"), "left_anti"),
-          querySh0.join(hot, Seq("h"), "left_anti"))
-      case None => (groupSh0, querySh0)
+        (g0.join(hot, Seq("h"), "left_anti"), q0.join(hot, Seq("h"), "left_anti"))
+      case None => (g0, q0)
     }
-    val queryN = querySh.groupBy("query_id").agg(count(lit(1)).as("query_n"))
-    querySh.join(groupSh, "h")
+    val queryN = q.groupBy("query_id").agg(count(lit(1)).as("query_n"))
+    q.join(g, "h")
       .groupBy("query_id", "group")
       .agg(count(lit(1)).as("match_cnt"))
       .join(queryN, "query_id")
@@ -91,32 +81,18 @@ object Classify {
       shingleK: Int = 8,
       minFraction: Double = 0.1,
       seed: Long = DefaultSeed): DataFrame =
-    applyFilters(exactCounts(corpus, queries, shingleK, seed), minFraction)
+    applyFilters(
+      exactCounts(groupShingles(corpus, shingleK, seed),
+        queryShingles(queries, shingleK, seed)),
+      minFraction)
 
-  /** Per-group partitioned-Bloom filter table (group, bf) — the build stage
-    * shared by sketch(), hierarchicalSketch() and their `*WithFilters`
-    * probe variants (so one build can feed several probe strategies without
-    * re-running the dominant shingle-explode + Bloom aggregation). Salted
-    * two-stage build: skew-proof and byte-identical to direct. */
+  /** Per-group partitioned-Bloom filter table (group, bf) over a (group, h)
+    * shingle table ([[groupShingles]]; duplicates allowed) — the one input
+    * of every Bloom probe below, so one build can feed several probe
+    * strategies without re-running the dominant shingle-explode + Bloom
+    * aggregation. Salted two-stage build: skew-proof and byte-identical to
+    * direct. */
   def buildFilters(
-      corpus: DataFrame, // (group, text)
-      shingleK: Int = 8,
-      expectedShinglesPerGroup: Long = 1 << 17,
-      fpp: Double = 0.0039,
-      saltBuckets: Int = 8,
-      seed: Long = DefaultSeed): DataFrame = {
-    val groupSh = corpus.select(col("group"),
-      explode(shingles(col("text"), shingleK, seed = seed)).as("h"))
-    buildFiltersFromShingles(groupSh, expectedShinglesPerGroup, fpp,
-      saltBuckets, seed)
-  }
-
-  /** [[buildFilters]] over a prebuilt (group, h) shingle table — Bloom
-    * insertion is set-idempotent (bit OR), so feeding the DISTINCT
-    * [[groupShingles]] table yields byte-identical filters to the raw
-    * explode while letting a caller share that table with the exact path
-    * (classify_bloom_bounds does). */
-  def buildFiltersFromShingles(
       groupSh: DataFrame, // (group, h)
       expectedShinglesPerGroup: Long = 1 << 17,
       fpp: Double = 0.0039,
@@ -130,8 +106,9 @@ object Classify {
       finalAggs =
         Seq(bloom_merge_agg(col("bf_p"), expectedShinglesPerGroup, fpp, seed).as("bf")))
 
-  /** Flat probe of a prebuilt (group, bf) filter table. */
-  def sketchCountsWithFilters(
+  /** Raw Bloom-filter match counts of a (group, bf) filter table, no
+    * thresholds; same shape as exactCounts. */
+  def sketchCounts(
       filters: DataFrame, // (group, bf)
       queries: DataFrame, // (query_id, text)
       shingleK: Int = 8,
@@ -145,62 +122,32 @@ object Classify {
       .select("query_id", "group", "match_cnt", "query_n")
   }
 
-  /** Raw Bloom-filter match counts, no filters; same shape as exactCounts. */
-  def sketchCounts(
-      corpus: DataFrame, // (group, text)
-      queries: DataFrame, // (query_id, text)
-      shingleK: Int = 8,
-      expectedShinglesPerGroup: Long = 1 << 17,
-      fpp: Double = 0.0039,
-      saltBuckets: Int = 8,
-      seed: Long = DefaultSeed): DataFrame =
-    sketchCountsWithFilters(
-      buildFilters(corpus, shingleK, expectedShinglesPerGroup, fpp,
-        saltBuckets, seed),
-      queries, shingleK, seed)
-
-  /** Bloom-accelerated classification; identical shape to `exact`. `fpp`
-    * controls the overcount slack (reference parity: 0.0039,
-    * xorfilter.hpp:60-62). */
+  /** Flat Bloom classification of a (group, bf) filter table; identical
+    * shape to `exact`. The filters' `fpp` sets the overcount slack
+    * (reference parity: 0.0039, xorfilter.hpp:60-62). */
   def sketch(
-      corpus: DataFrame,
-      queries: DataFrame,
-      shingleK: Int = 8,
-      minFraction: Double = 0.1,
-      expectedShinglesPerGroup: Long = 1 << 17,
-      fpp: Double = 0.0039,
-      saltBuckets: Int = 8,
-      seed: Long = DefaultSeed): DataFrame =
-    applyFilters(
-      sketchCounts(corpus, queries, shingleK, expectedShinglesPerGroup, fpp,
-        saltBuckets, seed),
-      minFraction)
-
-  /** Flat Bloom classification over a prebuilt (group, bf) filter table. */
-  def sketchWithFilters(
       filters: DataFrame, // (group, bf)
       queries: DataFrame, // (query_id, text)
       shingleK: Int = 8,
       minFraction: Double = 0.1,
       seed: Long = DefaultSeed): DataFrame =
-    applyFilters(
-      sketchCountsWithFilters(filters, queries, shingleK, seed), minFraction)
+    applyFilters(sketchCounts(filters, queries, shingleK, seed), minFraction)
 
-  /** Interleaved-probe classification over a prebuilt (group, bf) filter
-    * table — the reference's own probe shape (bulk count over an
-    * interleaved multi-bin structure, see [[graft.sketch.Interleaved]]):
-    * all member filters are bit-transposed into ONE blob (driver-side;
-    * `maxBlobBytes` bounds the groups×filter-size assembly loudly, with
+  /** Interleaved-probe classification of a (group, bf) filter table —
+    * the reference's own probe shape (bulk count over an interleaved
+    * multi-bin structure, see [[graft.sketch.Interleaved]]): all member
+    * filters are bit-transposed into ONE blob (driver-side; `maxBlobBytes`
+    * bounds the groups×filter-size assembly loudly, with
     * `hierarchicalSketch` as the many-groups answer) that travels as a
-    * TorrentBroadcast handle resolved at analysis time (the IxfBlobs token
-    * route — a multi-MB Literal would be re-hashed per Catalyst tree
-    * compare and re-serialized into every stage's task binary; small
-    * scalar blobs elsewhere do use Literals, see SURVEY §9) — and each
-    * query's per-group counts come from one codegen'd bulk-count pass over
-    * its hash set where every probed bit-block serves ALL groups at once.
-    * Output is provably identical to `sketchWithFilters` (same bits;
-    * equality gated in `classify_interleaved` and OperatorsSpec). */
-  def interleavedSketchWithFilters(
+    * TorrentBroadcast handle held by the probe expression (a multi-MB
+    * Literal would be re-hashed per Catalyst tree compare and
+    * re-serialized into every stage's task binary; small scalar blobs
+    * elsewhere do use Literals, see SURVEY §9) — and each query's
+    * per-group counts come from one codegen'd bulk-count pass over its
+    * hash set where every probed bit-block serves ALL groups at once.
+    * Output is provably identical to `sketch` (same bits; equality gated
+    * in `classify_interleaved` and OperatorsSpec). */
+  def interleavedSketch(
       filters: DataFrame, // (group, bf)
       queries: DataFrame, // (query_id, text)
       shingleK: Int = 8,
@@ -227,80 +174,26 @@ object Classify {
         s"interleaved blob would exceed $maxBlobBytes bytes " +
           s"(${groupsBuf.size + 1}+ groups, >= $totalBytes bytes): too " +
           "many groups for a single driver-assembled interleaved blob — " +
-          "probe with hierarchicalSketchWithFilters (two-level, broadcast " +
+          "probe with hierarchicalSketch (two-level, broadcast " +
           "bounded by surviving buckets) or raise maxBlobBytes")
       groupsBuf += r.getString(0)
       blobsBuf += bf
     }
     val groups = groupsBuf.toSeq
     val blob = graft.sketch.Interleaved.fromFilters(blobsBuf.toSeq)
-    val token = graft.functions.IxfBlobs.register(filters.sparkSession, blob)
-    try {
-      val probes = queries.select(col("query_id"),
-        shingles(col("text"), shingleK, seed = seed).as("hs"))
-        .withColumn("query_n", size(col("hs")))
-      val counts = probes
-        .select(col("query_id"), col("query_n"),
-          posexplode(ixf_count_contained_bcast(token, col("hs")))
-            .as(Seq("bin", "match_cnt")))
-        .where(col("match_cnt") > 0)
-        .select(col("query_id"),
-          element_at(typedLit(groups), col("bin") + 1).as("group"),
-          col("match_cnt"), col("query_n"))
-      applyFilters(counts, minFraction)
-      // Dataset construction analyzes eagerly, so the builder has already
-      // resolved the token into a Broadcast handle inside the returned
-      // plan — the registry entry can be dropped immediately (the handle
-      // keeps the broadcast alive; ContextCleaner reclaims it when the
-      // plan itself is unreferenced).
-    } finally graft.functions.IxfBlobs.unregister(token)
-  }
-
-  /** Hierarchical two-level Bloom probe — the Spark-first analogue of the
-    * reference's HIXF search structure (a coarse level prunes which
-    * fine-level filters a query probes at all,
-    * /root/reference/src/hixf/search/search.cpp): groups are hashed into
-    * `nBuckets` super-groups whose filters are the OR-MERGE of their member
-    * filters (associative Bloom merge, same (m, k, seed) params). A query
-    * probes the small bucket layer first; only buckets whose count clears
-    * the threshold get their member group filters probed, via a join on
-    * bucket id instead of a probes × all-groups cross product.
-    *
-    * Pruning is LOSSLESS: the bucket filter's bit array is the bitwise OR
-    * of its members' (same m/k/seed), so any probe hash that hits a member
-    * filter also hits the bucket filter ⇒ bucket_cnt >= every member
-    * group_cnt ⇒ a bucket pruned at threshold τ contains no group the flat
-    * probe would keep at τ. Hierarchical output == flat sketch() output
-    * exactly (asserted in OperatorsSpec).
-    *
-    * At 100×: the broadcast is nBuckets coarse filters + only the SURVIVING
-    * buckets' member filters (left-semi against the stage-1 survivors)
-    * rather than all group filters at once — the boundary documented in
-    * SURVEY §9 for the flat path moves from |groups| to |buckets| +
-    * survivors. Output: (query_id, group, match_cnt, query_n), filtered
-    * like sketch().
-    */
-  def hierarchicalSketch(
-      corpus: DataFrame, // (group, text)
-      queries: DataFrame, // (query_id, text)
-      shingleK: Int = 8,
-      minFraction: Double = 0.1,
-      nBuckets: Int = 16,
-      expectedShinglesPerGroup: Long = 1 << 17,
-      fpp: Double = 0.0039,
-      saltBuckets: Int = 8,
-      seed: Long = DefaultSeed): DataFrame = {
-    // persisted: the filter table (one small row per group) appears in the
-    // final plan three times (bucket merge, live-bucket semi-join, fine
-    // probe) — without the cache every action re-runs the dominant
-    // shingle-explode + Bloom build that many times. Evictable; lineage
-    // recomputes deterministically if dropped.
-    val filters =
-      buildFilters(corpus, shingleK, expectedShinglesPerGroup, fpp,
-        saltBuckets, seed)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    hierarchicalSketchWithFilters(filters, queries, shingleK, minFraction,
-      nBuckets, expectedShinglesPerGroup, fpp, seed)
+    val bcast = filters.sparkSession.sparkContext.broadcast(blob)
+    val probes = queries.select(col("query_id"),
+      shingles(col("text"), shingleK, seed = seed).as("hs"))
+      .withColumn("query_n", size(col("hs")))
+    val counts = probes
+      .select(col("query_id"), col("query_n"),
+        posexplode(ixf_count_contained_bcast(bcast, col("hs")))
+          .as(Seq("bin", "match_cnt")))
+      .where(col("match_cnt") > 0)
+      .select(col("query_id"),
+        element_at(typedLit(groups), col("bin") + 1).as("group"),
+        col("match_cnt"), col("query_n"))
+    applyFilters(counts, minFraction)
   }
 
   /** C3-style layout choice for the coarse level: bucket count ≈
@@ -369,13 +262,37 @@ object Classify {
     }
   }
 
-  /** Two-level probe of a prebuilt (group, bf) filter table (see
-    * hierarchicalSketch for semantics and the losslessness argument).
+  /** Hierarchical two-level Bloom probe — the Spark-first analogue of the
+    * reference's HIXF search structure (a coarse level prunes which
+    * fine-level filters a query probes at all,
+    * src/hixf/search/search.cpp in the reference): groups are hashed into
+    * `nBuckets` super-groups whose filters are the OR-MERGE of their member
+    * filters (associative Bloom merge, same (m, k, seed) params). A query
+    * probes the small bucket layer first; only buckets whose count clears
+    * the threshold get their member group filters probed, via a join on
+    * bucket id instead of a probes × all-groups cross product.
+    *
+    * Pruning is LOSSLESS: the bucket filter's bit array is the bitwise OR
+    * of its members' (same m/k/seed), so any probe hash that hits a member
+    * filter also hits the bucket filter ⇒ bucket_cnt >= every member
+    * group_cnt ⇒ a bucket pruned at threshold τ contains no group the flat
+    * probe would keep at τ. Hierarchical output == flat sketch() output
+    * exactly (asserted in OperatorsSpec).
+    *
+    * At 100×: the broadcast is nBuckets coarse filters + only the SURVIVING
+    * buckets' member filters (left-semi against the stage-1 survivors)
+    * rather than all group filters at once — the boundary documented in
+    * SURVEY §9 for the flat path moves from |groups| to |buckets| +
+    * survivors. Output: (query_id, group, match_cnt, query_n), filtered
+    * like sketch().
+    *
     * `filters` should be persisted by the caller — the plan references it
     * three times. `nBuckets <= 0` picks the coarse layout automatically
-    * from the group count (autoBuckets). */
-  def hierarchicalSketchWithFilters(
-      filters0: DataFrame, // (group, bf)
+    * from the group count (autoBuckets); `expectedShinglesPerGroup`, `fpp`
+    * and `seed` must match the filter build.
+    */
+  def hierarchicalSketch(
+      filters: DataFrame, // (group, bf)
       queries: DataFrame, // (query_id, text)
       shingleK: Int = 8,
       minFraction: Double = 0.1,
@@ -391,16 +308,16 @@ object Classify {
         // extra corpus pass), then the expected-probe-cost sweep. The
         // collect is one (group, double) row per group, same tiny scale as
         // the broadcast the probe ships anyway.
-        val ests = filters0
+        val ests = filters
           .select(col("group"), bloom_items_estimate(col("bf")).as("est"))
           .collect()
           .map(r => r.getString(0) -> r.getDouble(1)).toSeq
         planCoarseBuckets(ests, expectedShinglesPerGroup, fpp)
       }
-    val filters = filters0
+    val bucketed = filters
       .withColumn("bucket", pmod(xxhash64(col("group")), lit(buckets)))
     // coarse level: OR-merge of member filters per bucket (tiny table)
-    val bucketFilters = filters.groupBy("bucket")
+    val bucketFilters = bucketed.groupBy("bucket")
       .agg(bloom_merge_agg(col("bf"), expectedShinglesPerGroup, fpp, seed)
         .as("bbf"))
     val probes = queries.select(col("query_id"),
@@ -418,7 +335,7 @@ object Classify {
       .select("query_id", "hs", "query_n", "bucket")
     // stage 2: probe only the surviving buckets' member filters — the
     // left-semi restricts the broadcast payload to live buckets
-    val liveFilters = filters.select("bucket", "group", "bf")
+    val liveFilters = bucketed.select("bucket", "group", "bf")
       .join(surviving.select("bucket").distinct(), Seq("bucket"), "left_semi")
     val counts = surviving
       .join(broadcast(liveFilters), "bucket")
@@ -445,23 +362,22 @@ object Classify {
       shingleK: Int = 8,
       sketchFpr: Double = 0.0,
       seed: Long = DefaultSeed): DataFrame =
-    applyFiltersCI(exactCounts(corpus, queries, shingleK, seed), mode, sketchFpr)
+    applyFiltersCI(
+      exactCounts(groupShingles(corpus, shingleK, seed),
+        queryShingles(queries, shingleK, seed)),
+      mode, sketchFpr)
 
-  /** Bloom-path twin of exactCI; `fpp` feeds both the filter build and the
-    * threshold's fp correction (taxor_search.cpp:262). */
+  /** Bloom-path twin of exactCI over a (group, bf) filter table; `fpp` is
+    * the filters' build fpp and feeds the threshold's fp correction
+    * (taxor_search.cpp:262). */
   def sketchCI(
-      corpus: DataFrame,
-      queries: DataFrame,
+      filters: DataFrame, // (group, bf)
+      queries: DataFrame, // (query_id, text)
       mode: graft.functions.Thresholds.Mode,
       shingleK: Int = 8,
-      expectedShinglesPerGroup: Long = 1 << 17,
       fpp: Double = 0.0039,
-      saltBuckets: Int = 8,
       seed: Long = DefaultSeed): DataFrame =
-    applyFiltersCI(
-      sketchCounts(corpus, queries, shingleK, expectedShinglesPerGroup, fpp,
-        saltBuckets, seed),
-      mode, fpp)
+    applyFiltersCI(sketchCounts(filters, queries, shingleK, seed), mode, fpp)
 
   /** F4 — null-result preservation: queries with no surviving match are
     * re-emitted with a null group (the reference's `-` rows,

@@ -630,7 +630,7 @@ object Dedup {
     * index more than once — e.g. the before/after identity probe around
     * [[compactFingerprintIndex]] — can persist these two small tables and
     * pay the dominant per-byte shingle+md5 work once (the
-    * buildFilters/sketchWithFilters posture; library operators never
+    * Classify.buildFilters posture; library operators never
     * cache, callers do). Params come from the manifest, so a mismatched
     * index still fails loudly here. */
   def probeProjections(

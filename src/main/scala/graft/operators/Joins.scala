@@ -36,18 +36,15 @@ object Joins {
     *    ~1.7 GB filter) a Literal is itself the scale-killer — Catalyst
     *    re-hashes a Literal's full bytes per tree compare and
     *    re-serializes it into every stage's task binary — so the blob
-    *    travels as a TorrentBroadcast handle resolved at analysis time
-    *    (the IxfBlobs token route), released as soon as the plan is
-    *    constructed. */
+    *    travels as a TorrentBroadcast handle held by the expression. */
   private def bloomFiltered(
       probe: DataFrame, build: DataFrame, key: String, expectedKeys: Long,
       fpp: Double, seed: Long): DataFrame = {
     val blob = build
       .agg(bloom_agg_hashed(xxhash64(col(key)), expectedKeys, fpp, seed))
       .first().getAs[Array[Byte]](0)
-    val (pred, release) =
-      bloom_contains_routed(probe.sparkSession, blob, xxhash64(col(key)))
-    try probe.where(pred) finally release()
+    probe.where(
+      bloom_contains_routed(probe.sparkSession, blob, xxhash64(col(key))))
   }
 
   /** Inner-join `probe` with `build`, pre-filtering the probe side with a

@@ -237,7 +237,8 @@ object Similarity {
       * growing fraction means the frozen centroid layout no longer covers
       * the data distribution and a rebuild (or k-means refresh) is due.
       * The fraction is also recorded in the manifest (`last_drift_x1m`,
-      * with `appends` bumped) so operators can watch it without rerunning. */
+      * with `appends` bumped) so operators can watch it without rerunning.
+      * An empty batch returns 0.0 and leaves the index untouched. */
     def append(newVecs: DataFrame, // (id, vec)
         dir: String,
         driftSimFloor: Double = 0.5): Double = {
@@ -263,28 +264,34 @@ object Similarity {
           when(!col("__bad"),
             element_at(nearest_centroids(col("vec"), centsLit, 1), 1)))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val stats = flagged
-        .select(col("__bad"), when(!col("__bad"),
-          cosine(col("vec"), element_at(centsLit, col("cid") + 1))).as("sim"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("__bad"), 1L).otherwise(0L)).as("bad"),
-          sum(when(!col("__bad") && col("sim") < driftSimFloor, 1L)
-            .otherwise(0L)).as("low"))
-        .first()
-      require(stats.getLong(1) == 0L,
-        s"IVF append at $dir: null vectors or dims disagreeing with the " +
-          s"index ($dims) — appending them would corrupt cell assignment")
-      val drift =
-        if (stats.getLong(0) == 0L) 0.0
-        else stats.getLong(2).toDouble / stats.getLong(0)
-      flagged.drop("__bad")
-        .write.mode("append").partitionBy("cid").parquet(s"$dir/data")
-      flagged.unpersist()
-      graft.sources.SketchTable.saveManifestOnly(spark, dir,
-        p ++ Map(
-          "appends" -> (p.getOrElse("appends", "0").toLong + 1).toString,
-          "last_drift_x1m" -> math.round(drift * 1e6).toString))
-      drift
+      try {
+        val stats = flagged
+          .select(col("__bad"), when(!col("__bad"),
+            cosine(col("vec"), element_at(centsLit, col("cid") + 1))).as("sim"))
+          .agg(count(lit(1)).as("n"),
+            sum(when(col("__bad"), 1L).otherwise(0L)).as("bad"),
+            sum(when(!col("__bad") && col("sim") < driftSimFloor, 1L)
+              .otherwise(0L)).as("low"))
+          .first()
+        // an empty batch is routine in a probe-then-append loop: the sums
+        // over zero rows are NULL, and there is nothing to write or record
+        val n = stats.getLong(0)
+        if (n == 0L) 0.0
+        else {
+          require(stats.getLong(1) == 0L,
+            s"IVF append at $dir: null vectors or dims disagreeing with " +
+              s"the index ($dims) — appending them would corrupt cell " +
+              "assignment")
+          val drift = stats.getLong(2).toDouble / n
+          flagged.drop("__bad")
+            .write.mode("append").partitionBy("cid").parquet(s"$dir/data")
+          graft.sources.SketchTable.saveManifestOnly(spark, dir,
+            p ++ Map(
+              "appends" -> (p.getOrElse("appends", "0").toLong + 1).toString,
+              "last_drift_x1m" -> math.round(drift * 1e6).toString))
+          drift
+        }
+      } finally flagged.unpersist()
     }
 
     /** Compact an appended IVF index in place: every append leaves one

@@ -234,6 +234,22 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     assert(again == fromIndex)
   }
 
+  test("ivf append of an empty batch writes nothing and reports zero drift") {
+    val corpus = vecs.toDF("id", "vec")
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-empty").toString
+    Similarity.IvfIndex.build(corpus, dir, nCentroids = 8)
+    def files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .toArray.map(_.toString).sorted.toSeq
+    val before = files
+    val manifestBefore = graft.sources.SketchTable.readManifest(spark, dir)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    assert(Similarity.IvfIndex.append(corpus.limit(0), dir) == 0.0)
+    assert(files == before, "empty append wrote files")
+    assert(graft.sources.SketchTable.readManifest(spark, dir) == manifestBefore)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore,
+      "empty append left its batch cached")
+  }
+
   test("cosine near-dup pairs via srp lsh") {
     val got = Similarity.cosineNearDupPairs(vecs, threshold = 0.999,
         tables = 16, bits = 6)
@@ -255,8 +271,9 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val got = Classify.exact(corpus, queries, minFraction = 0.1)
       .select("query_id", "group").as[(Long, String)].collect().toSet
     assert(got == Set((1L, "gB"), (2L, "gA")))
-    val sk = Classify.sketch(corpus, queries, minFraction = 0.1,
-        expectedShinglesPerGroup = 4096)
+    val filters = Classify.buildFilters(Classify.groupShingles(corpus),
+      expectedShinglesPerGroup = 4096)
+    val sk = Classify.sketch(filters, queries, minFraction = 0.1)
       .select("query_id", "group").as[(Long, String)].collect().toSet
     assert(sk == got, "bloom classification disagrees with exact")
     // adaptive CI thresholds (SF10 inside the plan): the k-mer mutation
@@ -270,9 +287,8 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
         graft.functions.Thresholds.Percentage(0.1))
       .select("query_id", "group").as[(Long, String)].collect().toSet
     assert(pct == got)
-    val skci = Classify.sketchCI(corpus, queries,
-        graft.functions.Thresholds.KmerCI(8, 0.05),
-        expectedShinglesPerGroup = 4096)
+    val skci = Classify.sketchCI(filters, queries,
+        graft.functions.Thresholds.KmerCI(8, 0.05))
       .select("query_id", "group").as[(Long, String)].collect().toSet
     assert(skci == got, "bloom CI classification disagrees")
   }
@@ -446,6 +462,23 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     assert(loaded > tiny, s"saturated choice $loaded vs tiny $tiny")
   }
 
+  test("buildFilters: raw shingle explode and its distinct table give identical bytes") {
+    // overlapping texts per group, so the raw explode repeats shingles
+    val corpus = (0 until 5).flatMap { g =>
+      (0 until 3).map(i => (s"g$g", s"shared words of group $g " * (4 + i)))
+    }.toDF("group", "text").repartition(3)
+    val raw = Classify.groupShingles(corpus)
+    def bytes(df: org.apache.spark.sql.DataFrame) =
+      df.select("group", "bf").as[(String, Array[Byte])].collect()
+        .map { case (g, b) => g -> b.toSeq }.toMap
+    val fromRaw = bytes(Classify.buildFilters(raw,
+      expectedShinglesPerGroup = 4096))
+    val fromDistinct = bytes(Classify.buildFilters(raw.distinct(),
+      expectedShinglesPerGroup = 4096))
+    assert(fromRaw.keySet == (0 until 5).map(g => s"g$g").toSet)
+    assert(fromRaw == fromDistinct, "Bloom insertion is not idempotent")
+  }
+
   test("hierarchical bloom probe equals the flat probe exactly") {
     // 9 groups across 3 buckets so the coarse layer actually prunes
     val corpus = (0 until 9).map { g =>
@@ -457,30 +490,26 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "group", "match_cnt", "query_n")
         .as[(Long, String, Long, Long)].collect().toSet
-    val flat = rows(Classify.sketch(corpus, queries, minFraction = 0.1,
-      expectedShinglesPerGroup = 4096))
-    val hier = rows(Classify.hierarchicalSketch(corpus, queries,
+    val filters = Classify.buildFilters(Classify.groupShingles(corpus),
+      expectedShinglesPerGroup = 4096).cache()
+    val flat = rows(Classify.sketch(filters, queries, minFraction = 0.1))
+    val hier = rows(Classify.hierarchicalSketch(filters, queries,
       minFraction = 0.1, nBuckets = 3, expectedShinglesPerGroup = 4096))
     // bucket filters are bitwise ORs of member filters with identical
     // params, so pruning is lossless: identical output, fewer fine probes
     assert(hier == flat, s"hier=$hier flat=$flat")
     assert(flat.map(_._1) == Set(0L, 2L, 4L, 6L, 8L))
-    // shared-build path + auto-chosen coarse layout: still equal to flat
-    val filters = Classify.buildFilters(corpus,
-      expectedShinglesPerGroup = 4096).cache()
-    val flat2 = rows(Classify.sketchWithFilters(filters, queries,
-      minFraction = 0.1))
-    val hierAuto = rows(Classify.hierarchicalSketchWithFilters(filters,
+    // auto-chosen coarse layout: still equal to flat
+    val hierAuto = rows(Classify.hierarchicalSketch(filters,
       queries, minFraction = 0.1, nBuckets = 0,
       expectedShinglesPerGroup = 4096))
     // interleaved bulk-count probe: same bits, one blob, same output
-    val ixf = rows(Classify.interleavedSketchWithFilters(filters, queries,
+    val ixf = rows(Classify.interleavedSketch(filters, queries,
       minFraction = 0.1))
     assert(ixf == flat, s"interleaved diverged: ixf=$ixf flat=$flat")
     filters.unpersist()
     assert(Classify.autoBuckets(9) == 3)
-    assert(flat2 == flat && hierAuto == flat,
-      s"shared/auto paths diverged: flat2=$flat2 hierAuto=$hierAuto")
+    assert(hierAuto == flat, s"auto layout diverged: hierAuto=$hierAuto")
   }
 
   test("profile unique-mapping + low-confidence filters") {
@@ -600,9 +629,11 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val corpus = d.select(concat(lit("g"), col("doc_id")).as("group"),
       col("text"))
     val q = Seq((99L, hot + hot)).toDF("query_id", "text")
-    val capCnt = Classify.exactCounts(corpus, q, maxGroupDf = Some(2L))
+    val (groupSh, querySh) =
+      (Classify.groupShingles(corpus), Classify.queryShingles(q))
+    val capCnt = Classify.exactCounts(groupSh, querySh, maxGroupDf = Some(2L))
     assert(capCnt.where(col("match_cnt") > 0).count() == 0)
-    assert(Classify.exactCounts(corpus, q)
+    assert(Classify.exactCounts(groupSh, querySh)
       .where(col("match_cnt") > 0).count() > 0)
   }
 
@@ -1029,18 +1060,21 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val build = (0L until 499L).filter(_ % 7 == 0).map(k => (k, s"b$k"))
       .toDF("k", "tag")
     // expectedKeys 1<<20 at fpp 0.0039 sizes the blob to ~1.4 MB — above
-    // IxfBlobs.LiteralMaxBytes, so the predicate must resolve through the
-    // TorrentBroadcast token, never a multi-MB Literal
-    val before = graft.functions.IxfBlobs.liveTokens
+    // GraftFunctions.LiteralMaxBytes, so the predicate must hold the blob
+    // as a TorrentBroadcast handle, never a multi-MB Literal
     val big = Joins.bloomSemiFilter(probe, build, "k",
       expectedKeys = 1L << 20)
-    assert(graft.functions.IxfBlobs.liveTokens == before,
-      "broadcast token leaked after plan construction")
     // analyzed plan (ConvertToLocalRelation folds the filter over this
     // in-memory relation before the physical plan; parquet scans keep it)
     val planBig = big.queryExecution.analyzed.toString
     assert(planBig.contains("graft_bloom_contains_bcast"),
       s"large blob did not take the broadcast route:\n$planBig")
+    // the plan's own expression holds the broadcast blob
+    val bcast = big.queryExecution.analyzed.flatMap(_.expressions)
+      .flatMap(_.collect { case b: graft.functions.BloomContainsBcast => b })
+    assert(bcast.size == 1 &&
+      bcast.head.blob.value.length > graft.GraftFunctions.LiteralMaxBytes,
+      planBig)
     val small = Joins.bloomSemiFilter(probe, build, "k",
       expectedKeys = 1024)
     val planSmall = small.queryExecution.analyzed.toString
@@ -1072,21 +1106,22 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val queries = Seq(
       (1L, "one two three four five six seven eight nine ten " * 6)
     ).toDF("query_id", "text")
-    val filters = Classify.buildFilters(corpus,
+    val filters = Classify.buildFilters(Classify.groupShingles(corpus),
       expectedShinglesPerGroup = 4096)
     val e = intercept[IllegalArgumentException] {
-      Classify.interleavedSketchWithFilters(filters, queries,
-        maxBlobBytes = 64L)
+      Classify.interleavedSketch(filters, queries, maxBlobBytes = 64L)
     }
-    assert(e.getMessage.contains("hierarchicalSketchWithFilters"),
+    assert(e.getMessage.contains("hierarchicalSketch"),
       s"budget error must name the fallback: ${e.getMessage}")
-    // within budget the probe works and releases its token
-    val before = graft.functions.IxfBlobs.liveTokens
-    val ok = Classify.interleavedSketchWithFilters(filters, queries)
-      .select("query_id", "group").as[(Long, String)].collect().toSet
+    // within budget the probe works, its blob held by the plan's own
+    // broadcast node
+    val okDf = Classify.interleavedSketch(filters, queries)
+    val ok = okDf.select("query_id", "group").as[(Long, String)]
+      .collect().toSet
     assert(ok == Set((1L, "gB")))
-    assert(graft.functions.IxfBlobs.liveTokens == before,
-      "interleave token leaked after plan construction")
+    val bcast = okDf.queryExecution.analyzed.flatMap(_.expressions)
+      .flatMap(_.collect { case b: graft.functions.IxfCountContainedBcast => b })
+    assert(bcast.size == 1, okDf.queryExecution.analyzed.toString)
   }
 
   test("weighted sampling excludes null and non-positive weights") {
@@ -1701,6 +1736,26 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
         "doc_id", "text", dir)
     }
     assert(e.getMessage.contains("kind"))
+  }
+
+  test("conv index probe over prebuilt fingerprints equals the turn-level probe") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-conv-fps-eq").toString
+    val mk = (c: String, x: String) =>
+      Seq((c, 0, "user", x), (c, 1, "assistant", x + "!"))
+    Conversations.buildFingerprintIndex(
+      (mk("a", "hi") ++ mk("b", "yo")).toDF("conv_id", "turn_idx", "role", "text"),
+      dir)
+    val turns = (mk("a2", "hi") ++ mk("b2", "yo") ++ mk("c", "new"))
+      .toDF("conv_id", "turn_idx", "role", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("conv_id").as[(String, String, Boolean)].collect().toSeq
+    val viaTurns = rows(Conversations.dedupAgainstIndex(turns, dir))
+    val viaFps = rows(Conversations.dedupAgainstIndexWithFps(spark,
+      Conversations.fingerprints(turns), dir))
+    assert(viaTurns == viaFps)
+    assert(viaTurns == Seq(("a2", "a", true), ("b2", "b", true),
+      ("c", null, false)))
   }
 
   test("sessionize splits on inactivity gaps, 0-based per conversation") {

@@ -98,10 +98,11 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val filters = graft.operators.Classify.buildFilters(
-      docs.select(col("source").as("group"), col("text")),
+      graft.operators.Classify.groupShingles(
+        docs.select(col("source").as("group"), col("text"))),
       expectedShinglesPerGroup = 4096)
     val p = graft.operators.Classify
-      .interleavedSketchWithFilters(filters,
+      .interleavedSketch(filters,
         docs.limit(20).select(col("doc_id").as("query_id"), col("text")),
         minFraction = 0.1)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))

@@ -4,14 +4,13 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump formatted physical plans for selected queries so the
   * shuffle/broadcast/codegen/pushdown story can be audited by eye.
-  * Usage: runMain graft.PlanCheck <sfDir> [queryName ...]
+  * Usage: runMain graft.PlanCheck <sfDir> <queryName ...>
   */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val names = if (args.length > 1) args.drop(1).toSeq
-      else Seq("q01_pricing_summary", "classify_exact", "ann_topk",
-        "dedup_minhash_lsh", "hll_distinct_users")
+    require(args.length > 1, "usage: PlanCheck <sfDir> <queryName ...>; " +
+      s"known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
+    val (sfDir, names) = (args(0), args.drop(1).toSeq)
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")

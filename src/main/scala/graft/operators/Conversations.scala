@@ -190,9 +190,7 @@ object Conversations {
       spark: org.apache.spark.sql.SparkSession,
       fps: DataFrame, // (conv_id, conv_fp)
       dir: String): DataFrame = {
-    val manifest = graft.sources.SketchTable.readManifest(spark, dir)
-    graft.sources.SketchTable.requireParams(manifest,
-      Map("kind" -> "conv_fingerprint"), dir)
+    graft.sources.SketchTable.openIndex(spark, dir, "conv_fingerprint")
     fps
       .join(spark.read.parquet(s"$dir/fps"), Seq("conv_fp"), "left")
       .select(col("conv_id"), col("canonical_id").as("match_id"),
@@ -216,10 +214,7 @@ object Conversations {
       spark: org.apache.spark.sql.SparkSession,
       fps: DataFrame, // (conv_id, conv_fp)
       dir: String): Unit = {
-    val manifest = graft.sources.SketchTable.readManifest(spark, dir)
-    graft.sources.SketchTable.requireParams(manifest,
-      Map("kind" -> "conv_fingerprint"), dir)
-    val p = graft.sources.SketchTable.params(manifest)
+    val p = graft.sources.SketchTable.openIndex(spark, dir, "conv_fingerprint")
     val fresh = fps
       .groupBy("conv_fp").agg(min(col("conv_id")).as("canonical_id"))
       .join(spark.read.parquet(s"$dir/fps").select("conv_fp"),
@@ -229,7 +224,7 @@ object Conversations {
       fresh.count() // snapshot before writing into the anti-joined path
       fresh.write.mode("append").parquet(s"$dir/fps")
       graft.sources.SketchTable.saveManifestOnly(spark, dir,
-        p + ("appends" -> (p.getOrElse("appends", "0").toLong + 1).toString))
+        graft.sources.SketchTable.bump(p, "appends"))
     } finally fresh.unpersist()
   }
 

@@ -509,10 +509,7 @@ object Dedup {
       newDocs: DataFrame, idCol: String, textCol: String,
       dir: String): Unit = {
     val spark = newDocs.sparkSession
-    val manifest = graft.sources.SketchTable.readManifest(spark, dir)
-    graft.sources.SketchTable.requireParams(manifest,
-      Map("kind" -> "fingerprint"), dir)
-    val p = graft.sources.SketchTable.params(manifest)
+    val p = graft.sources.SketchTable.openIndex(spark, dir, "fingerprint")
     // persisted for the two consumers (content-hash pass + shingle pass)
     // — the batch usually arrives with an expensive probe/filter lineage,
     // and a nondeterministic source would otherwise yield inconsistent
@@ -556,8 +553,7 @@ object Dedup {
         () => newExact.write.mode("append").parquet(s"$dir/exact"),
         () => newShingles.write.mode("append").parquet(s"$dir/shingles"))
       graft.sources.SketchTable.saveManifestOnly(spark, dir,
-        p + ("appends" ->
-          (p.getOrElse("appends", "0").toLong + 1).toString))
+        graft.sources.SketchTable.bump(p, "appends"))
     } finally {
       newExact.unpersist(); newShingles.unpersist(); docs.unpersist()
     }
@@ -579,10 +575,7 @@ object Dedup {
   def compactFingerprintIndex(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       filesPerTable: Int = 8): Unit = {
-    val manifest = graft.sources.SketchTable.readManifest(spark, dir)
-    graft.sources.SketchTable.requireParams(manifest,
-      Map("kind" -> "fingerprint"), dir)
-    val p = graft.sources.SketchTable.params(manifest)
+    val p = graft.sources.SketchTable.openIndex(spark, dir, "fingerprint")
     def rewrite(sub: String, key: String): Unit = {
       val path = s"$dir/$sub"
       val tmp = s"$dir/${sub}_compact_tmp"
@@ -600,8 +593,7 @@ object Dedup {
       () => rewrite("shingles", "gh"),
       () => rewrite("hot", "gh"))
     graft.sources.SketchTable.saveManifestOnly(spark, dir,
-      p + ("compactions" ->
-        (p.getOrElse("compactions", "0").toLong + 1).toString))
+      graft.sources.SketchTable.bump(p, "compactions"))
   }
 
   /** Dedup a new batch against a persisted fingerprint index. Output:
@@ -637,10 +629,7 @@ object Dedup {
       newDocs: DataFrame, idCol: String, textCol: String,
       dir: String): (DataFrame, DataFrame) = {
     val spark = newDocs.sparkSession
-    val manifest = graft.sources.SketchTable.readManifest(spark, dir)
-    graft.sources.SketchTable.requireParams(manifest,
-      Map("kind" -> "fingerprint"), dir)
-    val p = graft.sources.SketchTable.params(manifest)
+    val p = graft.sources.SketchTable.openIndex(spark, dir, "fingerprint")
     val hashes = newDocs
       .select(col(idCol).cast("long").as("doc_id"),
         md5(col(textCol)).as("content_hash"))

@@ -492,10 +492,7 @@ object Sampling {
       idCol: String,
       dir: String): DataFrame = {
     val spark = df.sparkSession
-    val manifest = graft.sources.SketchTable.readManifest(spark, dir)
-    graft.sources.SketchTable.requireParams(
-      manifest, Map("kind" -> "export_shards"), dir)
-    val p = graft.sources.SketchTable.params(manifest)
+    val p = graft.sources.SketchTable.openIndex(spark, dir, "export_shards")
     def need(k: String): String = p.getOrElse(k,
       sys.error(s"export scheme at $dir: manifest missing '$k'"))
     exportShards(df, idCol, need("n_shards").toInt, need("seed"))
@@ -538,10 +535,7 @@ object Sampling {
       dir: String,
       splitCol: String = "split"): DataFrame = {
     val spark = df.sparkSession
-    val manifest = graft.sources.SketchTable.readManifest(spark, dir)
-    graft.sources.SketchTable.requireParams(
-      manifest, Map("kind" -> "hash_split"), dir)
-    val p = graft.sources.SketchTable.params(manifest)
+    val p = graft.sources.SketchTable.openIndex(spark, dir, "hash_split")
     def need(k: String): String = p.getOrElse(k,
       sys.error(s"split scheme at $dir: manifest missing '$k'"))
     val weights = need("weights").split(",").toSeq.map { kv =>

@@ -243,10 +243,7 @@ object Similarity {
         dir: String,
         driftSimFloor: Double = 0.5): Double = {
       val spark = newVecs.sparkSession
-      val manifest = graft.sources.SketchTable.readManifest(spark, dir)
-      graft.sources.SketchTable.requireParams(
-        manifest, Map("kind" -> "ivf"), dir)
-      val p = graft.sources.SketchTable.params(manifest)
+      val p = graft.sources.SketchTable.openIndex(spark, dir, "ivf")
       val cents = loadCentroids(spark, dir)
       val dims = cents.head.size
       val centsLit = typedLit(cents)
@@ -286,9 +283,8 @@ object Similarity {
           flagged.drop("__bad")
             .write.mode("append").partitionBy("cid").parquet(s"$dir/data")
           graft.sources.SketchTable.saveManifestOnly(spark, dir,
-            p ++ Map(
-              "appends" -> (p.getOrElse("appends", "0").toLong + 1).toString,
-              "last_drift_x1m" -> math.round(drift * 1e6).toString))
+            graft.sources.SketchTable.bump(p, "appends") +
+              ("last_drift_x1m" -> math.round(drift * 1e6).toString))
           drift
         }
       } finally flagged.unpersist()
@@ -304,27 +300,20 @@ object Similarity {
       * caveat applies — the index is a rebuildable derived artifact). */
     def compact(spark: org.apache.spark.sql.SparkSession,
         dir: String): Unit = {
-      val manifest = graft.sources.SketchTable.readManifest(spark, dir)
-      graft.sources.SketchTable.requireParams(
-        manifest, Map("kind" -> "ivf"), dir)
-      val p = graft.sources.SketchTable.params(manifest)
+      val p = graft.sources.SketchTable.openIndex(spark, dir, "ivf")
       val tmp = s"$dir/data_compact_tmp"
       spark.read.parquet(s"$dir/data")
         .repartition(col("cid"))
         .write.mode("overwrite").partitionBy("cid").parquet(tmp)
       graft.sources.SketchTable.replaceDir(spark, tmp, s"$dir/data")
       graft.sources.SketchTable.saveManifestOnly(spark, dir,
-        p + ("compactions" ->
-          (p.getOrElse("compactions", "0").toLong + 1).toString))
+        graft.sources.SketchTable.bump(p, "compactions"))
     }
 
     def loadCentroids(
         spark: org.apache.spark.sql.SparkSession,
         dir: String): Seq[Seq[Float]] = {
-      val manifest = graft.sources.SketchTable.readManifest(spark, dir)
-      graft.sources.SketchTable.requireParams(
-        manifest, Map("kind" -> "ivf"), dir)
-      val p = graft.sources.SketchTable.params(manifest)
+      val p = graft.sources.SketchTable.openIndex(spark, dir, "ivf")
       val n = p.getOrElse("n_centroids",
         sys.error(s"no n_centroids in manifest at $dir")).toInt
       val dims = p.getOrElse("dims",

@@ -90,6 +90,20 @@ object SketchTable {
         s"parameters would be silently wrong: ${bad.mkString("; ")}")
   }
 
+  /** Open the persisted index at `dir`: read its manifest, require its
+    * `kind` (a wrong-kind dir fails loudly, see requireParams) and return
+    * its params. */
+  def openIndex(
+      spark: SparkSession, dir: String, kind: String): Map[String, String] = {
+    val manifest = readManifest(spark, dir)
+    requireParams(manifest, Map("kind" -> kind), dir)
+    params(manifest)
+  }
+
+  /** `p` with its `counter` (`appends`, `compactions`) bumped by one. */
+  def bump(p: Map[String, String], counter: String): Map[String, String] =
+    p + (counter -> (p.getOrElse(counter, "0").toLong + 1).toString)
+
   /** Load + validate in one step (see requireParams). */
   def loadValidated(
       spark: SparkSession,

@@ -24,4 +24,15 @@ class OracleContractSpec extends AnyFunSuite {
       "41fdc0d6c50a4dffa4704a26fc42cd4e1896bc0fabc61cc1c1c5b9dc1940b2e1",
       "gate names changed")
   }
+
+  test("oracle_sql.json bytes as Verify writes them are frozen") {
+    // the exact string graft.Verify serialises: map iteration order, not
+    // sorted, so a change to how the map is built shows up here too
+    def q(s: String): String = "\"" + Bench.jsonEscape(s) + "\""
+    val json = SparkEntry.oracleSql
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    assert(sha256(json) ==
+      "7ee51609fcaf9932471dee6aee6f2431640a1165aa04a53fc87100fb15027ead",
+      "oracle_sql.json bytes changed")
+  }
 }

@@ -3,6 +3,7 @@ package gates
 
 import graft.GraftFunctions._
 import graft.operators._
+import graft.sources.runParallel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -182,7 +183,7 @@ private[graft] object ClassifyGates {
       // the two probe strategies are independent DAGs over the shared
       // (cached) filter build — materialize them concurrently (guide §2.6)
       val ns = new Array[Long](2)
-      Dedup.runParallel(
+      runParallel(
         () => ns(0) = flat.count(),
         () => ns(1) = hier.count())
       val (nFlat, nHier) = (ns(0), ns(1))
@@ -210,7 +211,7 @@ private[graft] object ClassifyGates {
         .select(cols.map(col): _*).cache()
       // independent probe DAGs over the shared cached build (guide §2.6)
       val ns = new Array[Long](2)
-      Dedup.runParallel(
+      runParallel(
         () => ns(0) = flat.count(),
         () => ns(1) = ixf.count())
       val (nFlat, nIxf) = (ns(0), ns(1))

@@ -136,26 +136,20 @@ private[graft] object ConversationGates {
       def wave(n: Int) = all.where(col("wave") === n).drop("wave")
       val idx = java.nio.file.Files
         .createTempDirectory("graft-conv-fpidx-gate").toString
-      // wave-1 fingerprints feed BOTH the probe and the append — persist
-      // the one per-turn aggregation (r6; caller-caches posture), and
-      // materialize it CONCURRENTLY with the independent wave-0 index
-      // build (both read the fixture dump only; guide §2.6). The probe
-      // result itself must still be MATERIALIZED (parquet, not a persist()
+      Conversations.buildFingerprintIndex(wave(0), idx)
+      // the wave-1 probe must be MATERIALIZED (parquet, not a persist()
       // cache) before the append mutates the index: an evicted cache would
       // silently recompute the probe against the post-append index, where
-      // every wave-1 conversation matches itself.
-      val fps1 = Conversations.fingerprints(wave(1)).persist()
-      Dedup.runParallel(
-        () => Conversations.buildFingerprintIndex(wave(0), idx),
-        () => fps1.count())
-      Conversations.dedupAgainstIndexWithFps(s, fps1, idx)
+      // every wave-1 conversation matches itself
+      val wave1Result = java.nio.file.Files
+        .createTempDirectory("graft-conv-wave1-gate").toString
+      Conversations.dedupAgainstIndex(wave(1), idx)
         .withColumn("wave", lit(1))
-        .write.mode("overwrite").parquet(s"$idx/wave1_result")
-      Conversations.appendToFingerprintIndexWithFps(s, fps1, idx)
-      fps1.unpersist()
+        .write.mode("overwrite").parquet(wave1Result)
+      Conversations.appendToFingerprintIndex(wave(1), idx)
       val r2 = Conversations.dedupAgainstIndex(wave(2), idx)
         .withColumn("wave", lit(2))
-      s.read.parquet(s"$idx/wave1_result").unionByName(r2)
+      s.read.parquet(wave1Result).unionByName(r2)
         .select("wave", "conv_id", "match_id", "is_duplicate")
         .orderBy("wave", "conv_id")
     },

@@ -3,6 +3,7 @@ package gates
 
 import graft.GraftFunctions._
 import graft.operators._
+import graft.sources.runParallel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -122,7 +123,7 @@ private[graft] object DedupGates {
       // simhash-banding and minhash-banding pair DAGs are independent —
       // materialize the two caches concurrently (guide §2.6)
       val ns = new Array[Long](2)
-      Dedup.runParallel(
+      runParallel(
         () => ns(0) = sim.count(),
         () => ns(1) = base.count())
       val (nSim, nBase) = (ns(0), ns(1))
@@ -285,34 +286,14 @@ private[graft] object DedupGates {
       Dedup.buildFingerprintIndex(
         docs.where(pmod(col("doc_id"), lit(3)) === 1), "doc_id", "text", idx,
         maxDf = Some(64))
+      Dedup.appendToFingerprintIndex(
+        docs.where(pmod(col("doc_id"), lit(3)) === 2), "doc_id", "text", idx)
       val probe = docs.where(pmod(col("doc_id"), lit(3)) === 0)
-      // the probe SIDE is identical before and after compaction — persist
-      // the two probeProjections tables and materialize them BEFORE the
-      // rewrite, so the per-byte shingle+md5 work over the probe third is
-      // paid once, not per probe (r6; caller-caches posture). Left cached:
-      // the returned plan's second probe consumes them at bench count()
-      // time. The projections read only the manifest params (append
-      // changes nothing a probe validates) and the build-frozen hot list,
-      // while the append touches exact/ and shingles/ only — so construct
-      // the projections first (manifest read precedes the append's counter
-      // bump) and overlap the append with the probe-side shingle+md5
-      // materialization (guide §2.6; ONE action materializes both caches,
-      // the appendToFingerprintIndex snapshot shape).
-      val (pHashes0, pSh0) = Dedup.probeProjections(probe, "doc_id", "text",
-        idx)
-      val pHashes = pHashes0.persist()
-      val pSh = pSh0.persist()
-      Dedup.runParallel(
-        () => Dedup.appendToFingerprintIndex(
-          docs.where(pmod(col("doc_id"), lit(3)) === 2), "doc_id", "text",
-          idx),
-        () => pHashes.select(lit(1).as("one"))
-          .unionAll(pSh.select(lit(1).as("one"))).count())
-      Dedup.dedupAgainstIndexWithProbes(s, pHashes, pSh, idx)
+      Dedup.dedupAgainstIndex(probe, "doc_id", "text", idx)
         .orderBy("doc_id", "match_id", "kind")
         .write.mode("overwrite").parquet(IdxCompactDumpPath)
       Dedup.compactFingerprintIndex(s, idx, filesPerTable = 4)
-      Dedup.dedupAgainstIndexWithProbes(s, pHashes, pSh, idx)
+      Dedup.dedupAgainstIndex(probe, "doc_id", "text", idx)
         .orderBy("doc_id", "match_id", "kind")
     },
       s"""SELECT doc_id, match_id, kind, jaccard_x1m
@@ -335,7 +316,7 @@ private[graft] object DedupGates {
       // the index build and the probe-side collect are independent scans of
       // the documents table — overlap them (guide §2.6)
       var probesV: Array[(Long, String)] = null
-      Dedup.runParallel(
+      runParallel(
         () => Dedup.buildFingerprintIndex(
           docs.where(pmod(col("doc_id"), lit(3)) =!= 0), "doc_id", "text",
           idx, maxDf = Some(64)),

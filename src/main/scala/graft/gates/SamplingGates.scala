@@ -289,8 +289,7 @@ private[graft] object SamplingGates {
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
       val cents = Similarity.pickCentroids(emb, 8)
       emb.select(col("id"),
-          element_at(nearest_centroids(col("vec"), typedLit(cents), 1), 1)
-            .cast("int").as("cell"))
+          Similarity.nearestCell(col("vec"), cents).cast("int").as("cell"))
         .write.mode("overwrite").parquet(CellsDumpPath)
       Similarity.clusterBalancedSample(emb, cents, k = 10)
         .select(col("id"), col("cell").cast("int").as("cell"),

@@ -3,6 +3,7 @@ package gates
 
 import graft.GraftFunctions._
 import graft.operators._
+import graft.sources.runParallel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -66,7 +67,7 @@ private[graft] object VectorGates {
       // jobs from a small driver pool (guide §2.6)
       val cents = Similarity.pickCentroids(corpus, 32)
       val recalls = new Array[Double](4)
-      Dedup.runParallel(
+      runParallel(
         () => recalls(0) = recallOf(
           Similarity.inlineIvfProbe(corpus, qs, cents, 5, nProbe = 8)),
         () => recalls(1) = plantedRecall(
@@ -180,7 +181,7 @@ private[graft] object VectorGates {
       // first-touch of the corpus cache is safe: per-partition cache locks)
       var semV: DataFrame = null
       var exactV: DataFrame = null
-      Dedup.runParallel(
+      runParallel(
         () => {
           semV = Similarity.semDedup(corpus, threshold = 0.9,
             nCentroids = 8).cache()
@@ -206,7 +207,7 @@ private[graft] object VectorGates {
       val exact = exactV
       // four independent counts over the two materialized label caches
       val cnts = new Array[Long](4)
-      Dedup.runParallel(
+      runParallel(
         () => cnts(0) = sem.where(!col("is_canonical"))
           .join(exact.where(!col("is_canonical")), Seq("id"), "left_anti")
           .count(),
@@ -261,7 +262,7 @@ private[graft] object VectorGates {
       // index-probe and inline-probe DAGs are independent — materialize
       // the two caches concurrently (guide §2.6)
       val ns = new Array[Long](2)
-      Dedup.runParallel(
+      runParallel(
         () => ns(0) = fromIndex.count(),
         () => ns(1) = inline.count())
       val (nIdx, nInline) = (ns(0), ns(1))

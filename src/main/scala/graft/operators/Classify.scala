@@ -61,8 +61,7 @@ object Classify {
     val (g0, q0) = (groupSh.distinct(), querySh.distinct())
     val (g, q) = maxGroupDf match {
       case Some(cap) =>
-        val hot = g0.groupBy("h").agg(count(lit(1)).as("__df"))
-          .where(col("__df") > cap).select("h")
+        val hot = Dedup.hotKeys(g0, "h", cap)
         (g0.join(hot, Seq("h"), "left_anti"), q0.join(hot, Seq("h"), "left_anti"))
       case None => (g0, q0)
     }

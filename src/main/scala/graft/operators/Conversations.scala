@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.SketchTable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -158,41 +159,32 @@ object Conversations {
       sum(gap).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
 
+  /** The conversation-fingerprint index's kind and its one table. */
+  private val IndexKind = "conv_fingerprint"
+  private val Fps = SketchTable.Table("fps")
+
   /** Persisted conversation-fingerprint index — the conv-level twin of
     * [[Dedup.buildFingerprintIndex]], and the reason a growing transcript
     * corpus never re-reads its history: the index is ONE (conv_fp,
     * canonical_id) row per distinct dialogue (32-hex string + id), so a
     * 10^12-turn corpus probes new batches against a table the size of its
     * conversation count. Kind-checked manifest; wrong-kind dirs fail
-    * loudly ([[graft.sources.SketchTable.requireParams]]). */
-  def buildFingerprintIndex(turns: DataFrame, dir: String): Unit = {
-    val spark = turns.sparkSession
-    fingerprints(turns)
-      .groupBy("conv_fp").agg(min(col("conv_id")).as("canonical_id"))
-      .write.mode("overwrite").parquet(s"$dir/fps")
-    graft.sources.SketchTable.saveManifestOnly(spark, dir,
-      Map("kind" -> "conv_fingerprint"))
-  }
+    * loudly ([[graft.sources.SketchTable.open]]). */
+  def buildFingerprintIndex(turns: DataFrame, dir: String): Unit =
+    SketchTable.create(turns.sparkSession, dir, IndexKind, Map.empty) {
+      _.write(Fps, fingerprints(turns)
+        .groupBy("conv_fp").agg(min(col("conv_id")).as("canonical_id")))
+    }
 
   /** Probe a batch of conversations against the persisted index:
     * (conv_id, match_id, is_duplicate) — match_id is the indexed
     * canonical conversation with the identical ordered (role, text)
     * dialogue, null when unseen. The batch's per-turn work is one
     * fingerprint aggregation; the index side is a (32-hex, id) table. */
-  def dedupAgainstIndex(turns: DataFrame, dir: String): DataFrame =
-    dedupAgainstIndexWithFps(turns.sparkSession, fingerprints(turns), dir)
-
-  /** [[dedupAgainstIndex]] over a prebuilt (conv_id, conv_fp) table — a
-    * caller probing AND appending the same batch (the production ingest
-    * loop, and the conv_dedup_index gate) persists one [[fingerprints]]
-    * result and pays the per-turn aggregation once. */
-  def dedupAgainstIndexWithFps(
-      spark: org.apache.spark.sql.SparkSession,
-      fps: DataFrame, // (conv_id, conv_fp)
-      dir: String): DataFrame = {
-    graft.sources.SketchTable.openIndex(spark, dir, "conv_fingerprint")
-    fps
-      .join(spark.read.parquet(s"$dir/fps"), Seq("conv_fp"), "left")
+  def dedupAgainstIndex(turns: DataFrame, dir: String): DataFrame = {
+    val idx = SketchTable.open(turns.sparkSession, dir, IndexKind)
+    fingerprints(turns)
+      .join(idx.read(Fps), Seq("conv_fp"), "left")
       .select(col("conv_id"), col("canonical_id").as("match_id"),
         col("canonical_id").isNotNull.as("is_duplicate"))
   }
@@ -201,32 +193,16 @@ object Conversations {
     * NOT seen are appended (arrival-order canonicalization — the
     * first-arrived conversation stays canonical, identical to [[dedup]]'s
     * min-id rule under monotone ingest ids). Idempotent per fingerprint
-    * (anti-join guard, snapshotted via persist+count before the append
-    * write so the job never re-lists the directory it is growing);
-    * manifest `appends` counter bumped. */
+    * (anti-join guard, snapshotted before the append write so the job
+    * never re-lists the directory it is growing); a batch with nothing new
+    * writes nothing, otherwise the manifest `appends` counter is bumped. */
   def appendToFingerprintIndex(turns: DataFrame, dir: String): Unit =
-    appendToFingerprintIndexWithFps(turns.sparkSession,
-      fingerprints(turns), dir)
-
-  /** [[appendToFingerprintIndex]] over a prebuilt (conv_id, conv_fp)
-    * table — see [[dedupAgainstIndexWithFps]]. */
-  def appendToFingerprintIndexWithFps(
-      spark: org.apache.spark.sql.SparkSession,
-      fps: DataFrame, // (conv_id, conv_fp)
-      dir: String): Unit = {
-    val p = graft.sources.SketchTable.openIndex(spark, dir, "conv_fingerprint")
-    val fresh = fps
-      .groupBy("conv_fp").agg(min(col("conv_id")).as("canonical_id"))
-      .join(spark.read.parquet(s"$dir/fps").select("conv_fp"),
-        Seq("conv_fp"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      fresh.count() // snapshot before writing into the anti-joined path
-      fresh.write.mode("append").parquet(s"$dir/fps")
-      graft.sources.SketchTable.saveManifestOnly(spark, dir,
-        graft.sources.SketchTable.bump(p, "appends"))
-    } finally fresh.unpersist()
-  }
+    SketchTable.append(turns.sparkSession, dir, IndexKind) { (idx, hold) =>
+      val fresh = hold(fingerprints(turns)
+        .groupBy("conv_fp").agg(min(col("conv_id")).as("canonical_id"))
+        .join(idx.read(Fps).select("conv_fp"), Seq("conv_fp"), "left_anti"))
+      SketchTable.NewRows(Seq(Fps -> fresh), fresh.count(), ())
+    }
 
   // ---- deterministic corruption planting (gate fixtures) -----------------
 

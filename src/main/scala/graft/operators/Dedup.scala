@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.GraftFunctions._
+import graft.sources.{SketchTable, runParallel}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -13,22 +14,12 @@ import org.apache.spark.sql.functions._
   * shuffle is O(docs · bands), independent of document length.
   */
 object Dedup {
-  /** Run independent Spark jobs from a small driver thread pool so a later
-    * job's tasks back-fill the cores a prior job's tail leaves idle (guide
-    * §2.6 overlap-independent-jobs; actions are only sequential because the
-    * driver calls them sequentially). First failure is rethrown after all
-    * threads finish. Used for independent table WRITES within one index
-    * mutation — each task must touch a distinct output directory. */
-  private[graft] def runParallel(tasks: (() => Unit)*): Unit = {
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = tasks.map { t =>
-      val th = new Thread(() =>
-        try t() catch { case e: Throwable => errs.add(e) })
-      th.start(); th
-    }
-    threads.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
-  }
+  /** Keys of `df` that occur in more than `cap` rows — the hot (boilerplate)
+    * keys every df cap drops with a left-anti join. */
+  private[operators] def hotKeys(
+      df: DataFrame, key: String, cap: Long): DataFrame =
+    df.groupBy(key).agg(count(lit(1)).as("__df"))
+      .where(col("__df") > cap).select(key)
 
   /** Exact duplicate grouping by full-content hash: every doc keeps the id
     * of its canonical (minimum-id) copy. One shuffle on the 128-bit hash. */
@@ -226,13 +217,8 @@ object Dedup {
       maxFingerprintDf: Option[Long] = None): DataFrame = {
     val fp0 = df.select(col(idCol).as("id"),
       explode(minimizers(col(textCol), shingleK, window, seed)).as("fp"))
-    val fp = maxFingerprintDf match {
-      case Some(cap) =>
-        val hot = fp0.groupBy("fp").agg(count(lit(1)).as("__df"))
-          .where(col("__df") > cap).select("fp")
-        fp0.join(hot, Seq("fp"), "left_anti")
-      case None => fp0
-    }
+    val fp = maxFingerprintDf.fold(fp0)(cap =>
+      fp0.join(hotKeys(fp0, "fp", cap), Seq("fp"), "left_anti"))
     fp.as("a").join(fp.as("b"),
         col("a.fp") === col("b.fp") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
@@ -265,15 +251,10 @@ object Dedup {
       df.select(col(idCol).as(as),
         explode(minimizers(col(textCol), shingleK, window, seed)).as("fp"))
     val tf0 = fps(train, trainIdCol, "train_id")
-    val tf = maxFingerprintDf match {
-      case Some(cap) =>
-        // the cap is train-side document frequency (boilerplate lives in
-        // the big corpus); held-out fingerprints are never dropped
-        val hot = tf0.groupBy("fp").agg(count(lit(1)).as("__df"))
-          .where(col("__df") > cap).select("fp")
-        tf0.join(hot, Seq("fp"), "left_anti")
-      case None => tf0
-    }
+    // the cap is train-side document frequency (boilerplate lives in the
+    // big corpus); held-out fingerprints are never dropped
+    val tf = maxFingerprintDf.fold(tf0)(cap =>
+      tf0.join(hotKeys(tf0, "fp", cap), Seq("fp"), "left_anti"))
     tf.join(fps(heldout, heldoutIdCol, "heldout_id"), "fp")
       .groupBy("train_id", "heldout_id")
       .agg(count(lit(1)).as("shared_fingerprints"))
@@ -366,13 +347,8 @@ object Dedup {
       maxShingleDf: Option[Long] = None): DataFrame = {
     val sh0 = df.select(col(idCol).as("id"),
       explode(shingles(col(textCol), shingleK, seed = seed)).as("h"))
-    val sh = maxShingleDf match {
-      case Some(cap) =>
-        val hot = sh0.groupBy("h").agg(count(lit(1)).as("__df"))
-          .where(col("__df") > cap).select("h")
-        sh0.join(hot, Seq("h"), "left_anti")
-      case None => sh0
-    }
+    val sh = maxShingleDf.fold(sh0)(cap =>
+      sh0.join(hotKeys(sh0, "h", cap), Seq("h"), "left_anti"))
     val counts = sh.groupBy("id").agg(count(lit(1)).as("n"))
     val inter = sh.as("a").join(sh.as("b"),
         col("a.h") === col("b.h") && col("a.id") < col("b.id"))
@@ -419,6 +395,12 @@ object Dedup {
       explode(graft.GraftFunctions.scaled_ghs(col(textCol), k, scaleHex,
         seed)).as("gh"))
 
+  /** The fingerprint index's kind and tables (see [[buildFingerprintIndex]]). */
+  private val IndexKind = "fingerprint"
+  private val Exact = SketchTable.Table("exact")
+  private val Shingles = SketchTable.Table("shingles")
+  private val Hot = SketchTable.Table("hot")
+
   /** Persist a dedup fingerprint index for a corpus:
     *   dir/exact/    (content_hash, canonical_id) — one row per distinct text
     *   dir/shingles/ (id, gh)                     — scaled k-gram md5 hexes
@@ -442,39 +424,30 @@ object Dedup {
     require(scaleHex.length == 2 &&
       scaleHex.forall(c => c.isDigit || ('a' to 'f').contains(c)),
       s"scaleHex must be two lowercase hex chars, got '$scaleHex'")
-    val spark = df.sparkSession
     // cached between the hot pass and the capped write — both consume the
     // same explode+md5 scan; unpersisted before return (build-local state)
     val sc = scaledFingerprints(df, idCol, textCol, k, scaleHex, seed)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the exact/ table and the hot→shingles chain touch DISTINCT output
-    // dirs and share no intermediate state — overlap them (r6, guide §2.6)
-    runParallel(
-      () =>
-        df.select(md5(col(textCol)).as("content_hash"),
-            col(idCol).cast("long").as("id"))
-          .groupBy("content_hash").agg(min(col("id")).as("canonical_id"))
-          .write.mode("overwrite").parquet(s"$dir/exact"),
-      () => {
-        val hot = maxDf match {
-          case Some(cap) =>
-            sc.groupBy("gh").agg(count(lit(1)).as("__df"))
-              .where(col("__df") > cap).select("gh")
-          case None => sc.select("gh").limit(0)
-        }
-        hot.write.mode("overwrite").parquet(s"$dir/hot")
-        // anti-join against the in-plan hot DF, not a re-read of the file
-        // just written: same rows by construction (hot is derived from the
-        // CACHED sc and was fully written above), one less scan stage (r6)
-        sc.join(hot, Seq("gh"), "left_anti")
-          .select("id", "gh")
-          .write.mode("overwrite").parquet(s"$dir/shingles")
-      })
-    sc.unpersist()
-    graft.sources.SketchTable.saveManifestOnly(spark, dir,
-      Map("kind" -> "fingerprint", "k" -> k.toString,
-        "scale_hex" -> scaleHex, "seed" -> seed,
-        "max_df" -> maxDf.map(_.toString).getOrElse("none")))
+    try SketchTable.create(df.sparkSession, dir, IndexKind,
+      Map("k" -> k.toString, "scale_hex" -> scaleHex, "seed" -> seed,
+        "max_df" -> maxDf.map(_.toString).getOrElse("none"))) { idx =>
+      // the exact/ table and the hot→shingles chain touch DISTINCT output
+      // dirs and share no intermediate state — overlap them (guide §2.6)
+      runParallel(
+        () => idx.write(Exact,
+          df.select(md5(col(textCol)).as("content_hash"),
+              col(idCol).cast("long").as("id"))
+            .groupBy("content_hash").agg(min(col("id")).as("canonical_id"))),
+        () => {
+          val hot = maxDf.fold(sc.select("gh").limit(0))(hotKeys(sc, "gh", _))
+          idx.write(Hot, hot)
+          // anti-join against the in-plan hot DF, not a re-read of the file
+          // just written: same rows by construction (hot is derived from
+          // the CACHED sc and was fully written above), one less scan
+          idx.write(Shingles,
+            sc.join(hot, Seq("gh"), "left_anti").select("id", "gh"))
+        })
+    } finally sc.unpersist()
   }
 
   /** Incremental fingerprint-index GROWTH — the dedup twin of
@@ -502,62 +475,38 @@ object Dedup {
     *    (exact/ by content hash, shingles/ by doc id), so a retried
     *    append after a partial failure cannot duplicate fingerprint rows
     *    (duplicated rows would silently inflate every later Jaccard
-    *    against those docs);
+    *    against those docs); a batch with nothing new writes nothing;
     *  - manifest: `appends` counter bumped, params unchanged, so probes
     *    validate exactly as before. */
   def appendToFingerprintIndex(
       newDocs: DataFrame, idCol: String, textCol: String,
-      dir: String): Unit = {
-    val spark = newDocs.sparkSession
-    val p = graft.sources.SketchTable.openIndex(spark, dir, "fingerprint")
-    // persisted for the two consumers (content-hash pass + shingle pass)
-    // — the batch usually arrives with an expensive probe/filter lineage,
-    // and a nondeterministic source would otherwise yield inconsistent
-    // exact-vs-shingle views; same posture as buildFingerprintIndex's
-    // shared-scan cache. Unpersisted before return (append-local state).
-    val docs = newDocs
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // both append jobs anti-join against the very parquet path they then
-    // append to — materialize the fully-guarded rows FIRST (persist + an
-    // action) so the write job consumes the cached blocks and never
-    // re-lists the directory it is concurrently growing (LocalFS snapshots
-    // the listing at read time; object stores may not)
-    val newExact = docs
-      .select(md5(col(textCol)).as("content_hash"),
-        col(idCol).cast("long").as("id"))
-      .groupBy("content_hash").agg(min(col("id")).as("canonical_id"))
-      .join(spark.read.parquet(s"$dir/exact").select("content_hash"),
-        Seq("content_hash"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val newShingles = scaledFingerprints(docs, idCol, textCol, p("k").toInt,
-        p("scale_hex"), p("seed"))
-      .join(spark.read.parquet(s"$dir/hot"), Seq("gh"), "left_anti")
-      // idempotence guard (mirrors the exact-path anti-join): a doc id
-      // already in the index — a retry after a partial failure, or a
-      // caller re-sending a batch — must not duplicate its rows. No
-      // distinct() on the guard side: LeftAnti keeps a row iff NO match
-      // exists, so right-side duplicates cannot change the result and the
-      // distinct was a pure extra shuffle of the whole index id column (r6)
-      .join(spark.read.parquet(s"$dir/shingles").select("id"),
-        Seq("id"), "left_anti")
-      .select("id", "gh")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // snapshot before any write — ONE action materializes both caches
-      // (two separate counts paid two job round-trips for tiny tables; r6)
-      newExact.select(lit(1).as("one"))
+      dir: String): Unit =
+    SketchTable.append(newDocs.sparkSession, dir, IndexKind) { (idx, hold) =>
+      // held for the two consumers (content-hash pass + shingle pass) —
+      // the batch usually arrives with an expensive probe/filter lineage,
+      // and a nondeterministic source would otherwise yield inconsistent
+      // exact-vs-shingle views
+      val docs = hold(newDocs)
+      val newExact = hold(docs
+        .select(md5(col(textCol)).as("content_hash"),
+          col(idCol).cast("long").as("id"))
+        .groupBy("content_hash").agg(min(col("id")).as("canonical_id"))
+        .join(idx.read(Exact).select("content_hash"),
+          Seq("content_hash"), "left_anti"))
+      val newShingles = hold(scaledFingerprints(docs, idCol, textCol,
+          idx("k").toInt, idx("scale_hex"), idx("seed"))
+        .join(idx.read(Hot), Seq("gh"), "left_anti")
+        // idempotence guard (mirrors the exact-path anti-join). No
+        // distinct() on the guard side: LeftAnti keeps a row iff NO match
+        // exists, so right-side duplicates cannot change the result
+        .join(idx.read(Shingles).select("id"), Seq("id"), "left_anti")
+        .select("id", "gh"))
+      // ONE action materializes both snapshots
+      val n = newExact.select(lit(1).as("one"))
         .unionAll(newShingles.select(lit(1).as("one"))).count()
-      // both tables are fully materialized caches from this point, writing
-      // to distinct dirs — overlap the two append jobs (r6, guide §2.6)
-      runParallel(
-        () => newExact.write.mode("append").parquet(s"$dir/exact"),
-        () => newShingles.write.mode("append").parquet(s"$dir/shingles"))
-      graft.sources.SketchTable.saveManifestOnly(spark, dir,
-        graft.sources.SketchTable.bump(p, "appends"))
-    } finally {
-      newExact.unpersist(); newShingles.unpersist(); docs.unpersist()
+      SketchTable.NewRows(Seq(Exact -> newExact, Shingles -> newShingles),
+        n, ())
     }
-  }
 
   /** Compact an appended fingerprint index in place: each table is
     * rewritten into `filesPerTable` files clustered on its probe key
@@ -568,32 +517,16 @@ object Dedup {
     * probe before and after compaction is byte-identical (driver-gated:
     * `dedup_index_compaction`). Cost is one shuffle of the INDEX tables
     * (~scale_hex/256 of corpus shingle volume), never the corpus — run it
-    * on the same cadence as the hot-list refresh. The swap is
-    * delete-then-rename per table (LocalFS rename refuses existing
-    * targets); a crash between the two loses only a rebuildable derived
-    * artifact, and the manifest (written last) still names the params. */
+    * on the same cadence as the hot-list refresh. */
   def compactFingerprintIndex(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       filesPerTable: Int = 8): Unit = {
-    val p = graft.sources.SketchTable.openIndex(spark, dir, "fingerprint")
-    def rewrite(sub: String, key: String): Unit = {
-      val path = s"$dir/$sub"
-      val tmp = s"$dir/${sub}_compact_tmp"
-      spark.read.parquet(path)
-        .repartition(filesPerTable, col(key))
-        .sortWithinPartitions(key)
-        .write.mode("overwrite").parquet(tmp)
-      graft.sources.SketchTable.replaceDir(spark, tmp, path)
-    }
-    // three independent table rewrites into distinct directories — overlap
-    // them so the wall is the largest table's rewrite, not the sum (r6,
-    // guide §2.6)
-    runParallel(
-      () => rewrite("exact", "content_hash"),
-      () => rewrite("shingles", "gh"),
-      () => rewrite("hot", "gh"))
-    graft.sources.SketchTable.saveManifestOnly(spark, dir,
-      graft.sources.SketchTable.bump(p, "compactions"))
+    def clustered(key: String)(df: DataFrame): DataFrame =
+      df.repartition(filesPerTable, col(key)).sortWithinPartitions(key)
+    SketchTable.compact(spark, dir, IndexKind)(
+      Exact -> clustered("content_hash"),
+      Shingles -> clustered("gh"),
+      Hot -> clustered("gh"))
   }
 
   /** Dedup a new batch against a persisted fingerprint index. Output:
@@ -611,54 +544,21 @@ object Dedup {
   def dedupAgainstIndex(
       newDocs: DataFrame, idCol: String, textCol: String, dir: String,
       minJaccardX1m: Long = 500000L): DataFrame = {
-    val (hashes, newSh) = probeProjections(newDocs, idCol, textCol, dir)
-    dedupAgainstIndexWithProbes(newDocs.sparkSession, hashes, newSh, dir,
-      minJaccardX1m)
-  }
-
-  /** The probe-side projections of [[dedupAgainstIndex]]: (content-hash
-    * rows `(doc_id, content_hash)`, capped scaled fingerprints
-    * `(id, gh)`). Exposed so a caller probing the SAME batch against an
-    * index more than once — e.g. the before/after identity probe around
-    * [[compactFingerprintIndex]] — can persist these two small tables and
-    * pay the dominant per-byte shingle+md5 work once (the
-    * Classify.buildFilters posture; library operators never
-    * cache, callers do). Params come from the manifest, so a mismatched
-    * index still fails loudly here. */
-  def probeProjections(
-      newDocs: DataFrame, idCol: String, textCol: String,
-      dir: String): (DataFrame, DataFrame) = {
-    val spark = newDocs.sparkSession
-    val p = graft.sources.SketchTable.openIndex(spark, dir, "fingerprint")
-    val hashes = newDocs
+    val idx = SketchTable.open(newDocs.sparkSession, dir, IndexKind)
+    val exact = newDocs
       .select(col(idCol).cast("long").as("doc_id"),
         md5(col(textCol)).as("content_hash"))
+      .join(idx.read(Exact), "content_hash")
+      .select(col("doc_id"), col("canonical_id").as("match_id"),
+        lit("exact").as("kind"), lit(1000000L).as("jaccard_x1m"))
     // the probe works in the index's capped universe: fingerprints the
     // build dropped as boilerplate are dropped here too (including from
     // the n_new denominator), so the Jaccard both sides compute is over
     // the same set family
-    val newSh = scaledFingerprints(newDocs, idCol, textCol, p("k").toInt,
-        p("scale_hex"), p("seed"))
-      .join(spark.read.parquet(s"$dir/hot"), Seq("gh"), "left_anti")
-    (hashes, newSh)
-  }
-
-  /** Index-side half of [[dedupAgainstIndex]] over prebuilt
-    * [[probeProjections]]. Each call re-reads the PERSISTED index tables
-    * (exact/shingles), so a probe after an in-place layout rewrite sees
-    * the rewritten files while the probe side stays fixed. */
-  def dedupAgainstIndexWithProbes(
-      spark: org.apache.spark.sql.SparkSession,
-      hashes: DataFrame, // (doc_id, content_hash)
-      newSh: DataFrame, // (id, gh), already hot-capped
-      dir: String,
-      minJaccardX1m: Long = 500000L): DataFrame = {
-    val exact = hashes
-      .join(spark.read.parquet(s"$dir/exact"), "content_hash")
-      .select(col("doc_id"), col("canonical_id").as("match_id"),
-        lit("exact").as("kind"), lit(1000000L).as("jaccard_x1m"))
-    val shIdx = spark.read.parquet(s"$dir/shingles")
-      .select(col("id").as("old_id"), col("gh"))
+    val newSh = scaledFingerprints(newDocs, idCol, textCol, idx("k").toInt,
+        idx("scale_hex"), idx("seed"))
+      .join(idx.read(Hot), Seq("gh"), "left_anti")
+    val shIdx = idx.read(Shingles).select(col("id").as("old_id"), col("gh"))
     val oldN = shIdx.groupBy("old_id").agg(count(lit(1)).as("n_old"))
     val newN = newSh.groupBy("id").agg(count(lit(1)).as("n_new"))
     val near = newSh.join(shIdx, "gh")

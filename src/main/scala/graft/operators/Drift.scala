@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.GraftFunctions._
 import graft.sketch.{Kll, SpaceSaving}
+import graft.sources.runParallel
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -45,7 +46,7 @@ object Drift {
     // the two snapshot passes are independent jobs — overlap them
     // (guide §2.6); blobs are partition-merge deterministic either way
     val ks = new Array[Kll](2)
-    Dedup.runParallel(
+    runParallel(
       () => ks(0) = Kll.fromBytes(
         a.agg(kll_agg(col(xColA), k)).first().getAs[Array[Byte]](0)),
       () => ks(1) = Kll.fromBytes(
@@ -81,7 +82,7 @@ object Drift {
         .toMap
     // independent per-snapshot aggregation jobs — overlap them (guide §2.6)
     val ms = new Array[Map[String, Kll]](2)
-    Dedup.runParallel(
+    runParallel(
       () => ms(0) = sketches(a),
       () => ms(1) = sketches(b))
     val (ma, mb) = (ms(0), ms(1))
@@ -150,7 +151,7 @@ object Drift {
     }
     // independent per-snapshot passes — overlap them (guide §2.6)
     val ps = new Array[(SpaceSaving, Array[Byte])](2)
-    Dedup.runParallel(
+    runParallel(
       () => ps(0) = pass(before),
       () => ps(1) = pass(after))
     val ((ssA, cmsA), (ssB, cmsB)) = (ps(0), ps(1))

@@ -295,14 +295,9 @@ object ProfilePipeline {
     bd.toPlainString
   }
 
-  private def writeLocal(df: DataFrame, path: String, lines: Seq[String]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(path), true)
-    out.write(lines.mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-  }
+  private def writeLocal(df: DataFrame, path: String, lines: Seq[String]): Unit =
+    graft.sources.SketchTable.writeText(df.sparkSession, path,
+      lines.mkString("", "\n", "\n"))
 
   /** IO9 — CAMI sequence-abundance file (profile_output.hpp:51-77):
     * `@Ranks` header, an `unclassified\tno rank\t-\t-\t<pct>` first row

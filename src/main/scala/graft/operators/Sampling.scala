@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.SketchTable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -444,6 +445,10 @@ object Sampling {
     sharded.withColumn("ord", row_number().over(w).cast("long"))
   }
 
+  /** The manifest kinds of the two frozen schemes. */
+  private val ExportKind = "export_shards"
+  private val SplitKind = "hash_split"
+
   /** Materialize a corpus export as a frozen artifact: [[exportShards]]
     * rows land at `dir/data/shard=<s>/` (one parquet directory per shard,
     * rows in ordinal order) with the (seed, nShards) scheme manifest at
@@ -459,12 +464,18 @@ object Sampling {
       idCol: String,
       dir: String,
       nShards: Int,
-      seed: String = "graft"): Unit = {
-    exportShards(df, idCol, nShards, seed)
-      .repartition(nShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("ord"))
-      .write.mode("overwrite").partitionBy("shard").parquet(s"$dir/data")
-    saveExportScheme(df.sparkSession, dir, nShards, seed)
+      seed: String = "graft"): Unit =
+    SketchTable.create(df.sparkSession, dir, ExportKind,
+      exportParams(nShards, seed)) {
+      _.write(SketchTable.Table("data", "shard"),
+        exportShards(df, idCol, nShards, seed)
+          .repartition(nShards, col("shard"))
+          .sortWithinPartitions(col("shard"), col("ord")))
+    }
+
+  private def exportParams(nShards: Int, seed: String): Map[String, String] = {
+    require(nShards >= 1 && nShards <= (1 << 20), s"nShards=$nShards")
+    Map("seed" -> seed, "n_shards" -> nShards.toString)
   }
 
   /** Freeze an export SCHEME (seed, nShards) as a versioned manifest —
@@ -476,13 +487,9 @@ object Sampling {
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       nShards: Int,
-      seed: String = "graft"): Unit = {
-    require(nShards >= 1 && nShards <= (1 << 20), s"nShards=$nShards")
-    graft.sources.SketchTable.saveManifestOnly(spark, dir, Map(
-      "kind" -> "export_shards",
-      "seed" -> seed,
-      "n_shards" -> nShards.toString))
-  }
+      seed: String = "graft"): Unit =
+    SketchTable.create(spark, dir, ExportKind, exportParams(nShards, seed))(
+      _ => ())
 
   /** Re-derive a frozen export: applies [[exportShards]] with EXACTLY the
     * (seed, nShards) recorded at `dir` by [[saveExportScheme]]; probing a
@@ -491,11 +498,8 @@ object Sampling {
       df: DataFrame,
       idCol: String,
       dir: String): DataFrame = {
-    val spark = df.sparkSession
-    val p = graft.sources.SketchTable.openIndex(spark, dir, "export_shards")
-    def need(k: String): String = p.getOrElse(k,
-      sys.error(s"export scheme at $dir: manifest missing '$k'"))
-    exportShards(df, idCol, need("n_shards").toInt, need("seed"))
+    val scheme = SketchTable.open(df.sparkSession, dir, ExportKind)
+    exportShards(df, idCol, scheme("n_shards").toInt, scheme("seed"))
   }
 
   /** Freeze a split SCHEME (seed, hash-domain tag, weights) as a versioned
@@ -518,11 +522,11 @@ object Sampling {
       require(n.matches("[A-Za-z0-9_.-]+"),
         s"split name '$n' — names in a frozen scheme must be [A-Za-z0-9_.-]+")
     }
-    graft.sources.SketchTable.saveManifestOnly(spark, dir, Map(
-      "kind" -> "hash_split",
+    SketchTable.create(spark, dir, SplitKind, Map(
       "seed" -> seed,
       "domain_tag" -> domainTag,
-      "weights" -> weights.map { case (n, w) => s"$n=$w" }.mkString(",")))
+      "weights" -> weights.map { case (n, w) => s"$n=$w" }.mkString(",")))(
+      _ => ())
   }
 
   /** Re-derive a frozen split: applies [[hashSplit]] with EXACTLY the
@@ -534,15 +538,13 @@ object Sampling {
       idCol: String,
       dir: String,
       splitCol: String = "split"): DataFrame = {
-    val spark = df.sparkSession
-    val p = graft.sources.SketchTable.openIndex(spark, dir, "hash_split")
-    def need(k: String): String = p.getOrElse(k,
-      sys.error(s"split scheme at $dir: manifest missing '$k'"))
-    val weights = need("weights").split(",").toSeq.map { kv =>
+    val scheme = SketchTable.open(df.sparkSession, dir, SplitKind)
+    val weights = scheme("weights").split(",").toSeq.map { kv =>
       val i = kv.lastIndexOf('=')
       require(i > 0, s"split scheme at $dir: malformed weight entry '$kv'")
       (kv.substring(0, i), kv.substring(i + 1).toDouble)
     }
-    hashSplit(df, idCol, weights, need("seed"), splitCol, need("domain_tag"))
+    hashSplit(df, idCol, weights, scheme("seed"), splitCol,
+      scheme("domain_tag"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.GraftFunctions._
+import graft.sources.{SketchTable, runParallel}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,6 +19,13 @@ object Similarity {
     * Codegen'd fused loop — Spark's zip_with/aggregate higher-order
     * functions are CodegenFallback and ~50x slower on this scan. */
   def cosine(a: Column, b: Column): Column = vec_cosine(a, b)
+
+  /** The 0-based id of the centroid in `cents` nearest to `vec` — the one
+    * cell assignment shared by inline IVF, the persisted index, SemDeDup
+    * and cluster sampling, so their cells cannot drift apart. */
+  private[graft] def nearestCell(
+      vec: Column, cents: Seq[Seq[Float]]): Column =
+    element_at(nearest_centroids(vec, typedLit(cents), 1), 1)
 
   /** Brute-force exact top-k neighbours for each query vector.
     * Queries are broadcast (small side); corpus streams once. Ties broken by
@@ -112,8 +120,7 @@ object Similarity {
       iters: Int): Seq[Seq[Float]] = {
     var cents = seed
     for (_ <- 1 to iters) {
-      val assigned = corpus.withColumn("cid",
-        element_at(nearest_centroids(col("vec"), typedLit(cents), 1), 1))
+      val assigned = corpus.withColumn("cid", nearestCell(col("vec"), cents))
       val stats = assigned
         .select(col("cid"), posexplode(col("vec")).as(Seq("pos", "x")))
         .groupBy("cid", "pos")
@@ -167,12 +174,10 @@ object Similarity {
       cents: Seq[Seq[Float]],
       k: Int,
       nProbe: Int): DataFrame = {
-    val centsLit = typedLit(cents)
     probeCells(
-      corpus.withColumn("cid",
-        element_at(nearest_centroids(col("vec"), centsLit, 1), 1)),
+      corpus.withColumn("cid", nearestCell(col("vec"), cents)),
       queries.withColumn("cid",
-        explode(nearest_centroids(col("qvec"), centsLit, nProbe))),
+        explode(nearest_centroids(col("qvec"), typedLit(cents), nProbe))),
       k)
   }
 
@@ -197,30 +202,31 @@ object Similarity {
     * scan arrives with a `cid IN (...)` partition filter — Spark prunes to
     * nProbe/nCentroids of the files before reading a byte. */
   object IvfIndex {
+    private val Kind = "ivf"
+    private val Data = SketchTable.Table("data", "cid")
+    private val Centroids = SketchTable.Table("centroids")
+
     def build(corpus: DataFrame, dir: String, nCentroids: Int = 32,
         kmeansIters: Int = 0): Unit = {
       val spark = corpus.sparkSession
       val cents = refineCentroids(
         corpus, pickCentroids(corpus, nCentroids), kmeansIters)
       require(cents.nonEmpty, "IVF build over an empty corpus")
-      val cells = corpus.withColumn("cid",
-        element_at(nearest_centroids(col("vec"), typedLit(cents), 1), 1))
-      // centroid matrix as a dedicated tiny parquet sidecar (one row per
-      // cell), not a string packed into the manifest — schema'd, typed, and
-      // immune to manifest quoting/ordering changes. The sidecar derives
-      // from driver memory, the data write from the corpus — two
-      // independent jobs into distinct dirs, overlapped (guide §2.6)
       import spark.implicits._
-      Dedup.runParallel(
-        () => cells.write.mode("overwrite").partitionBy("cid")
-          .parquet(s"$dir/data"),
-        () => cents.zipWithIndex.map { case (v, c) => (c, v) }
-          .toDF("cid", "vec")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids"))
-      graft.sources.SketchTable.saveManifestOnly(
-        spark, dir,
-        Map("kind" -> "ivf", "n_centroids" -> cents.size.toString,
-          "dims" -> cents.head.size.toString))
+      SketchTable.create(spark, dir, Kind, Map(
+          "n_centroids" -> cents.size.toString,
+          "dims" -> cents.head.size.toString)) { idx =>
+        // centroid matrix as a dedicated tiny parquet sidecar (one row per
+        // cell), not a string packed into the manifest — schema'd, typed,
+        // and immune to manifest quoting/ordering changes. The sidecar
+        // derives from driver memory, the data write from the corpus — two
+        // independent jobs into distinct dirs, overlapped (guide §2.6)
+        runParallel(
+          () => idx.write(Data,
+            corpus.withColumn("cid", nearestCell(col("vec"), cents))),
+          () => idx.write(Centroids, cents.zipWithIndex
+            .map { case (v, c) => (c, v) }.toDF("cid", "vec").coalesce(1)))
+      }
     }
 
     /** Incremental append — the production shape for a GROWING embedding
@@ -231,6 +237,8 @@ object Similarity {
       * rows identically to an inline IVF probe with the same centroids
       * (OperatorsSpec asserts the equivalence). Mismatched dims fail
       * loudly BEFORE any write (the taxor_search.cpp:97-151 posture).
+      * Idempotent per id: rows whose id the index already holds are
+      * skipped, so a retried batch cannot duplicate neighbours.
       *
       * Returns the centroid-drift signal: the fraction of appended vectors
       * whose nearest-centroid cosine falls below `driftSimFloor` — a
@@ -238,33 +246,30 @@ object Similarity {
       * the data distribution and a rebuild (or k-means refresh) is due.
       * The fraction is also recorded in the manifest (`last_drift_x1m`,
       * with `appends` bumped) so operators can watch it without rerunning.
-      * An empty batch returns 0.0 and leaves the index untouched. */
+      * A batch with no new rows returns 0.0 and leaves the index
+      * untouched. */
     def append(newVecs: DataFrame, // (id, vec)
         dir: String,
-        driftSimFloor: Double = 0.5): Double = {
-      val spark = newVecs.sparkSession
-      val p = graft.sources.SketchTable.openIndex(spark, dir, "ivf")
-      val cents = loadCentroids(spark, dir)
-      val dims = cents.head.size
-      val centsLit = typedLit(cents)
-      // one pass: dims/null guard + assignment + best-centroid similarity
-      // for the drift stat (the guard was a separate pre-scan before r6).
-      // Null vectors must fail too: size(null) is NULL so a plain =!=
-      // predicate silently drops them, and they would land in a junk
-      // null-cid partition no probe ever reads. CASE short-circuits per
-      // row, so a flagged row never reaches the centroid kernel, and the
-      // require below still fires BEFORE any write.
-      val flagged = newVecs
-        .withColumn("__bad",
-          col("vec").isNull || size(col("vec")) =!= dims)
-        .withColumn("cid",
-          when(!col("__bad"),
-            element_at(nearest_centroids(col("vec"), centsLit, 1), 1)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+        driftSimFloor: Double = 0.5): Double =
+      SketchTable.append(newVecs.sparkSession, dir, Kind) { (idx, hold) =>
+        val cents = centroids(idx)
+        val dims = cents.head.size
+        // one pass: dims/null guard + assignment + best-centroid
+        // similarity for the drift stat, and the snapshot of the rows to
+        // write. Null vectors must fail too: size(null) is NULL so a plain
+        // =!= predicate silently drops them, and they would land in a junk
+        // null-cid partition no probe ever reads. CASE short-circuits per
+        // row, so a flagged row never reaches the centroid kernel, and the
+        // require below still fires BEFORE any write.
+        val flagged = hold(newVecs
+          .join(idx.read(Data).select("id"), Seq("id"), "left_anti")
+          .withColumn("__bad",
+            col("vec").isNull || size(col("vec")) =!= dims)
+          .withColumn("cid",
+            when(!col("__bad"), nearestCell(col("vec"), cents))))
         val stats = flagged
-          .select(col("__bad"), when(!col("__bad"),
-            cosine(col("vec"), element_at(centsLit, col("cid") + 1))).as("sim"))
+          .select(col("__bad"), when(!col("__bad"), cosine(col("vec"),
+            element_at(typedLit(cents), col("cid") + 1))).as("sim"))
           .agg(count(lit(1)).as("n"),
             sum(when(col("__bad"), 1L).otherwise(0L)).as("bad"),
             sum(when(!col("__bad") && col("sim") < driftSimFloor, 1L)
@@ -273,59 +278,43 @@ object Similarity {
         // an empty batch is routine in a probe-then-append loop: the sums
         // over zero rows are NULL, and there is nothing to write or record
         val n = stats.getLong(0)
-        if (n == 0L) 0.0
-        else {
-          require(stats.getLong(1) == 0L,
-            s"IVF append at $dir: null vectors or dims disagreeing with " +
-              s"the index ($dims) — appending them would corrupt cell " +
-              "assignment")
-          val drift = stats.getLong(2).toDouble / n
-          flagged.drop("__bad")
-            .write.mode("append").partitionBy("cid").parquet(s"$dir/data")
-          graft.sources.SketchTable.saveManifestOnly(spark, dir,
-            graft.sources.SketchTable.bump(p, "appends") +
-              ("last_drift_x1m" -> math.round(drift * 1e6).toString))
-          drift
-        }
-      } finally flagged.unpersist()
-    }
+        require(n == 0L || stats.getLong(1) == 0L,
+          s"IVF append at $dir: null vectors or dims disagreeing with " +
+            s"the index ($dims) — appending them would corrupt cell " +
+            "assignment")
+        val drift = if (n == 0L) 0.0 else stats.getLong(2).toDouble / n
+        SketchTable.NewRows(Seq(Data -> flagged.drop("__bad")), n, drift,
+          Map("last_drift_x1m" -> math.round(drift * 1e6).toString))
+      }
 
     /** Compact an appended IVF index in place: every append leaves one
       * file per touched cell, so after N appends a probe of one cell opens
       * N small files. The rewrite shuffles `data/` once on cid and rewrites
       * each cell as a single file; rows, cells, and the partition-pruned
       * probe path are untouched (driver-gated: `ann_index_compaction`).
-      * Centroids/manifest params are preserved; `compactions` is bumped.
-      * Swap is delete-then-rename ([[graft.sources.SketchTable.replaceDir]]
-      * caveat applies — the index is a rebuildable derived artifact). */
+      * Centroids/manifest params are preserved; `compactions` is bumped. */
     def compact(spark: org.apache.spark.sql.SparkSession,
-        dir: String): Unit = {
-      val p = graft.sources.SketchTable.openIndex(spark, dir, "ivf")
-      val tmp = s"$dir/data_compact_tmp"
-      spark.read.parquet(s"$dir/data")
-        .repartition(col("cid"))
-        .write.mode("overwrite").partitionBy("cid").parquet(tmp)
-      graft.sources.SketchTable.replaceDir(spark, tmp, s"$dir/data")
-      graft.sources.SketchTable.saveManifestOnly(spark, dir,
-        graft.sources.SketchTable.bump(p, "compactions"))
-    }
+        dir: String): Unit =
+      SketchTable.compact(spark, dir, Kind)(Data -> (_.repartition(col("cid"))))
 
     def loadCentroids(
         spark: org.apache.spark.sql.SparkSession,
-        dir: String): Seq[Seq[Float]] = {
-      val p = graft.sources.SketchTable.openIndex(spark, dir, "ivf")
-      val n = p.getOrElse("n_centroids",
-        sys.error(s"no n_centroids in manifest at $dir")).toInt
-      val dims = p.getOrElse("dims",
-        sys.error(s"no dims in manifest at $dir")).toInt
-      val rows = spark.read.parquet(s"$dir/centroids")
-        .orderBy("cid").collect()
-        .map(r => (r.getInt(0), r.getSeq[Float](1).toSeq))
+        dir: String): Seq[Seq[Float]] =
+      centroids(SketchTable.open(spark, dir, Kind))
+
+    /** The centroid sidecar of an opened index, checked against its
+      * manifest. Sorted on the driver: at most nCentroids rows. */
+    private def centroids(idx: SketchTable.Index): Seq[Seq[Float]] = {
+      val n = idx("n_centroids").toInt
+      val dims = idx("dims").toInt
+      val rows = idx.read(Centroids).collect()
+        .map(r => (r.getInt(0), r.getSeq[Float](1).toSeq)).sortBy(_._1)
       require(rows.length == n && rows.map(_._1).toSeq == (0 until n),
-        s"IVF index at $dir: centroid sidecar has ${rows.length} rows, " +
-          s"manifest says $n")
+        s"IVF index at ${idx.dir}: centroid sidecar has ${rows.length} " +
+          s"rows, manifest says $n")
       require(rows.forall(_._2.size == dims),
-        s"IVF index at $dir: centroid dims disagree with manifest ($dims)")
+        s"IVF index at ${idx.dir}: centroid dims disagree with manifest " +
+          s"($dims)")
       rows.map(_._2).toSeq
     }
 
@@ -335,17 +324,16 @@ object Similarity {
         queries: DataFrame, // (qid, qvec)
         k: Int,
         nProbe: Int = 4): DataFrame = {
-      val cents = loadCentroids(spark, dir)
+      val idx = SketchTable.open(spark, dir, Kind)
+      val cents = centroids(idx)
       require(nProbe >= 1 && nProbe <= cents.size,
         s"nProbe=$nProbe out of range for ${cents.size} centroids")
-      val centsLit = typedLit(cents)
       val probes = queries.withColumn("cid",
-        explode(nearest_centroids(col("qvec"), centsLit, nProbe)))
+        explode(nearest_centroids(col("qvec"), typedLit(cents), nProbe)))
       // the probed cell set is bounded by nCentroids — driver-computing it
       // turns the scan filter into a static partition-pruning predicate
       val cids = probes.select("cid").distinct().collect().map(_.getInt(0))
-      val cells = spark.read.parquet(s"$dir/data")
-        .where(col("cid").isin(cids.toSeq: _*))
+      val cells = idx.read(Data).where(col("cid").isin(cids.toSeq: _*))
       probeCells(cells, probes, k)
     }
   }
@@ -402,8 +390,7 @@ object Similarity {
       threshold: Double,
       cents: Seq[Seq[Float]],
       maxIters: Int = 10): DataFrame = {
-    val cells = corpus.withColumn("cid",
-      element_at(nearest_centroids(col("vec"), typedLit(cents), 1), 1))
+    val cells = corpus.withColumn("cid", nearestCell(col("vec"), cents))
     // self-join recomputes both sides' lineage (documented engine-wide
     // convention — callers cache upstream if it matters)
     val pairs = cells.as("a").join(cells.as("b"),
@@ -462,8 +449,7 @@ object Similarity {
       k: Int,
       seed: String = "graft"): DataFrame = {
     require(cents.nonEmpty, "empty centroid matrix")
-    val cells = corpus.withColumn("cell",
-      element_at(nearest_centroids(col("vec"), typedLit(cents), 1), 1))
+    val cells = corpus.withColumn("cell", nearestCell(col("vec"), cents))
     Sampling.bottomK(cells, Seq("cell"), "id", k, seed)
       .select(col("id"), col("cell"), col("rk"))
   }

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.charset.StandardCharsets
 
 /** Checkpoint-resumable sketch build with per-chunk lineage + metrics.
   *
@@ -30,16 +29,6 @@ object SketchCheckpoint {
 
   private def fs(spark: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def writeAtomic(f: FileSystem, path: Path, content: String): Unit = {
-    val tmp = new Path(path.getParent, s".${path.getName}.tmp")
-    val out = f.create(tmp, true)
-    out.write(content.getBytes(StandardCharsets.UTF_8))
-    out.close()
-    if (f.exists(path)) f.delete(path, false) // re-manifest on resume
-    if (!f.rename(tmp, path))
-      throw new java.io.IOException(s"atomic rename failed: $path")
-  }
 
   /** Input parquet files, deterministically ordered and chunked. */
   def planChunks(
@@ -84,19 +73,17 @@ object SketchCheckpoint {
     // pin the chunking plan: resuming with a different filesPerChunk or a
     // changed input file list would otherwise silently double-merge stale
     // partials covering the same rows
-    val planPath = new Path(s"$workDir/plan.json")
+    val planPath = s"$workDir/plan.json"
     val planJson =
       s"""{"filesPerChunk":$filesPerChunk,"chunks":${chunks.length},
          |"filesHash":"${chunks.flatten.mkString("\n").hashCode}"}"""
         .stripMargin.replace("\n", "")
-    if (f.exists(planPath)) {
-      val in = f.open(planPath)
-      val prev = new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      in.close()
+    if (f.exists(new Path(planPath))) {
+      val prev = SketchTable.readText(spark, planPath)
       require(prev == planJson,
         s"checkpoint plan mismatch (previous run used a different chunking " +
           s"or input set): $prev vs $planJson — clean $workDir to rebuild")
-    } else writeAtomic(f, planPath, planJson)
+    } else SketchTable.writeText(spark, planPath, planJson)
     val done = committedChunks(spark, workDir)
     val results = chunks.zipWithIndex.map { case (files, id) =>
       if (done.contains(id)) None
@@ -117,7 +104,7 @@ object SketchCheckpoint {
              |"rows":$rows,"wall_ms":$wallMs,
              |"rows_per_sec":${if (wallMs > 0) rows * 1000 / wallMs else rows}}"""
             .stripMargin.replace("\n", "")
-        writeAtomic(f, new Path(s"$workDir/_commits/$id.json"), commit)
+        SketchTable.writeText(spark, s"$workDir/_commits/$id.json", commit)
         Some(ChunkResult(id, files, rows, wallMs))
       }
     }
@@ -137,7 +124,7 @@ object SketchCheckpoint {
          |"fresh_rows":${fresh.map(_.rows).sum},
          |"keys":[${keys.map(k => "\"" + k + "\"").mkString(",")}]}"""
         .stripMargin.replace("\n", "")
-    writeAtomic(f, new Path(s"$workDir/manifest.json"), manifest)
+    SketchTable.writeText(spark, s"$workDir/manifest.json", manifest)
     spark.read.parquet(s"$workDir/final")
   }
 }

@@ -33,15 +33,10 @@ object Timing {
     * shape ("Index I/O\tReads I/O\tCompute"). */
   def writeTimeFile(
       spark: SparkSession, outFile: String,
-      phases: Seq[(String, Double)]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(outFile + ".time")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    val body = phases.map(_._1).mkString("\t") + "\n" +
-      phases.map(x => f"${x._2}%.2f").mkString("\t")
-    out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-  }
+      phases: Seq[(String, Double)]): Unit =
+    SketchTable.writeText(spark, outFile + ".time",
+      phases.map(_._1).mkString("\t") + "\n" +
+        phases.map(x => f"${x._2}%.2f").mkString("\t"))
 
   /** (CPU seconds, peak RSS MiB) of this JVM — the reference's end-of-run
     * report. Returns -1 components where the platform doesn't expose them. */

@@ -234,22 +234,6 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     assert(again == fromIndex)
   }
 
-  test("ivf append of an empty batch writes nothing and reports zero drift") {
-    val corpus = vecs.toDF("id", "vec")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-empty").toString
-    Similarity.IvfIndex.build(corpus, dir, nCentroids = 8)
-    def files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .toArray.map(_.toString).sorted.toSeq
-    val before = files
-    val manifestBefore = graft.sources.SketchTable.readManifest(spark, dir)
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    assert(Similarity.IvfIndex.append(corpus.limit(0), dir) == 0.0)
-    assert(files == before, "empty append wrote files")
-    assert(graft.sources.SketchTable.readManifest(spark, dir) == manifestBefore)
-    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore,
-      "empty append left its batch cached")
-  }
-
   test("cosine near-dup pairs via srp lsh") {
     val got = Similarity.cosineNearDupPairs(vecs, threshold = 0.999,
         tables = 16, bits = 6)
@@ -349,13 +333,6 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
       .select("doc_id", "match_id", "kind")
       .as[(Long, Long, String)].collect().toSet
     assert(outCap == Set((10L, 1L, "exact")), outCap)
-    // probing a non-fingerprint dir fails loudly, never probes wrong
-    val wrong = java.nio.file.Files.createTempDirectory("fpidx-wrong").toString
-    graft.sources.SketchTable.saveManifestOnly(spark, wrong,
-      Map("kind" -> "ivf"))
-    intercept[IllegalArgumentException] {
-      Dedup.dedupAgainstIndex(newDocs, "doc_id", "text", wrong)
-    }
   }
 
   test("fingerprint index append equals a rebuild over the union") {
@@ -407,14 +384,6 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val p = graft.sources.SketchTable.params(
       graft.sources.SketchTable.readManifest(spark, appended))
     assert(p.get("appends").contains("2"), s"manifest not bumped: $p")
-    // appending into a non-fingerprint dir fails loudly
-    val wrong = java.nio.file.Files
-      .createTempDirectory("fpidx-append-wrong").toString
-    graft.sources.SketchTable.saveManifestOnly(spark, wrong,
-      Map("kind" -> "ivf"))
-    intercept[IllegalArgumentException] {
-      Dedup.appendToFingerprintIndex(batch, "doc_id", "text", wrong)
-    }
     // compaction: probes identical, appended wave-files merged into the
     // requested clustered layout, manifest compactions bumped, params kept
     val filesBefore = new java.io.File(s"$appended/shingles")
@@ -431,9 +400,6 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
       graft.sources.SketchTable.readManifest(spark, appended))
     assert(pc.get("compactions").contains("1"), s"no compaction bump: $pc")
     assert(pc.get("appends") == p.get("appends"), s"append history lost: $pc")
-    intercept[IllegalArgumentException] {
-      Dedup.compactFingerprintIndex(spark, wrong)
-    }
   }
 
   test("coarse-layout cost search avoids saturated bucket filters") {
@@ -1335,13 +1301,6 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val modern = Sampling.hashSplit(rows, "doc_id", ws, seed = "s9")
       .select("doc_id", "split").as[(Long, String)].collect().toMap
     assert(got != modern)
-    // wrong-kind manifest dirs fail loudly, never silently re-split
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-split2").toString
-    graft.sources.SketchTable.saveManifestOnly(spark, dir2,
-      Map("kind" -> "ivf"))
-    intercept[IllegalArgumentException] {
-      Sampling.hashSplitFromScheme(rows, "doc_id", dir2)
-    }
   }
 
   test("exportShards: a permutation into shards, repartition-stable, frozen") {
@@ -1364,19 +1323,13 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
       .select("doc_id", "shard", "ord")
       .as[(Long, Int, Long)].collect().sortBy(_._1).toSeq
     assert(re == got)
-    // frozen scheme replays verbatim; wrong-kind dirs fail loudly
+    // frozen scheme replays verbatim
     val dir = java.nio.file.Files.createTempDirectory("graft-exp").toString
     Sampling.saveExportScheme(spark, dir, nShards = 8)
     val replay = Sampling.exportShardsFromScheme(rows, "doc_id", dir)
       .select("doc_id", "shard", "ord")
       .as[(Long, Int, Long)].collect().sortBy(_._1).toSeq
     assert(replay == got)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-exp2").toString
-    graft.sources.SketchTable.saveManifestOnly(spark, dir2,
-      Map("kind" -> "hash_split"))
-    intercept[IllegalArgumentException] {
-      Sampling.exportShardsFromScheme(rows, "doc_id", dir2)
-    }
     // reserved output columns collide loudly, never silently overwrite
     intercept[IllegalArgumentException] {
       Sampling.exportShards(rows.withColumn("shard", lit(1)), "doc_id", 8)
@@ -1715,12 +1668,12 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val idxTurns = (mk("a", "hi") ++ mk("b", "yo"))
       .toDF("conv_id", "turn_idx", "role", "text")
     Conversations.buildFingerprintIndex(idxTurns, dir)
-    // probe: a re-ingest of "a" matches it; "c" is unseen
-    val probe = (mk("a2", "hi") ++ mk("c", "new"))
+    // probe: re-ingests of "a" and "b" match them; "c" is unseen
+    val probe = (mk("a2", "hi") ++ mk("b2", "yo") ++ mk("c", "new"))
       .toDF("conv_id", "turn_idx", "role", "text")
     val got = Conversations.dedupAgainstIndex(probe, dir)
       .orderBy("conv_id").as[(String, String, Boolean)].collect().toSeq
-    assert(got == Seq(("a2", "a", true), ("c", null, false)))
+    assert(got == Seq(("a2", "a", true), ("b2", "b", true), ("c", null, false)))
     // append is idempotent: fold the probe in twice, index rows stay
     // unique per fingerprint and "a"'s canonical stays first-arrived
     Conversations.appendToFingerprintIndex(probe, dir)
@@ -1729,33 +1682,13 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     assert(fps.count() == fps.select("conv_fp").distinct().count())
     val again = Conversations.dedupAgainstIndex(probe, dir)
       .orderBy("conv_id").as[(String, String, Boolean)].collect().toSeq
-    assert(again == Seq(("a2", "a", true), ("c", "c", true)))
+    assert(again == Seq(("a2", "a", true), ("b2", "b", true), ("c", "c", true)))
     // wrong-kind dirs fail loudly
     val e = intercept[IllegalArgumentException] {
       Dedup.dedupAgainstIndex(probe.withColumn("doc_id", lit(1L)),
         "doc_id", "text", dir)
     }
     assert(e.getMessage.contains("kind"))
-  }
-
-  test("conv index probe over prebuilt fingerprints equals the turn-level probe") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-conv-fps-eq").toString
-    val mk = (c: String, x: String) =>
-      Seq((c, 0, "user", x), (c, 1, "assistant", x + "!"))
-    Conversations.buildFingerprintIndex(
-      (mk("a", "hi") ++ mk("b", "yo")).toDF("conv_id", "turn_idx", "role", "text"),
-      dir)
-    val turns = (mk("a2", "hi") ++ mk("b2", "yo") ++ mk("c", "new"))
-      .toDF("conv_id", "turn_idx", "role", "text")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("conv_id").as[(String, String, Boolean)].collect().toSeq
-    val viaTurns = rows(Conversations.dedupAgainstIndex(turns, dir))
-    val viaFps = rows(Conversations.dedupAgainstIndexWithFps(spark,
-      Conversations.fingerprints(turns), dir))
-    assert(viaTurns == viaFps)
-    assert(viaTurns == Seq(("a2", "a", true), ("b2", "b", true),
-      ("c", null, false)))
   }
 
   test("sessionize splits on inactivity gaps, 0-based per conversation") {

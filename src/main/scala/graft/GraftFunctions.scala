@@ -3,16 +3,22 @@ package graft
 import graft.agg._
 import graft.functions._
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, GraftColumns, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{Column, GraftColumns, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** Function registry + Column facade for the graft sketch engine.
+/** Function table + Column facade for the graft sketch engine.
   *
-  * All functions are registered into the session's FunctionRegistry so they
-  * work from SQL and via `call_function` — which keeps the whole pipeline
-  * inside Catalyst (codegen'd expressions, partial aggregation) rather than
-  * opaque Scala UDFs.
+  * Every graft SQL function is one row of [[table]]: its name, its literal
+  * parameters and their types, and its kernel (a static method and its
+  * result type) or its sketch kind. `register`, `injectInto` and the facade
+  * all derive from the table; all functions land in the session's
+  * FunctionRegistry so they work from SQL and via `call_function` — which
+  * keeps the whole pipeline inside Catalyst (codegen'd expressions, partial
+  * aggregation) rather than opaque Scala UDFs.
   *
   * User columns are hashed with the built-in codegen'd `xxhash64` before
   * they reach a sketch aggregate, so every aggregate consumes LONG hashes
@@ -22,148 +28,160 @@ import org.apache.spark.sql.functions._
 object GraftFunctions {
   val DefaultSeed: Long = TextOps.DefaultSeed
 
-  private def arg(e: Expression, name: String): Any = {
-    require(e.foldable, s"graft function argument '$name' must be a literal")
-    e.eval()
-  }
-  private def intArg(e: Expression, name: String): Int = arg(e, name) match {
-    case i: Int => i
-    case l: Long => l.toInt
-    case o => throw new IllegalArgumentException(s"$name: expected int, got $o")
-  }
-  private def longArg(e: Expression, name: String): Long = arg(e, name) match {
-    case i: Int => i.toLong
-    case l: Long => l
-    case o => throw new IllegalArgumentException(s"$name: expected long, got $o")
-  }
-  private def doubleArg(e: Expression, name: String): Double =
-    arg(e, name) match {
-      case d: Double => d
-      case f: Float => f.toDouble
-      case i: Int => i.toDouble
-      case l: Long => l.toDouble
-      case d: java.math.BigDecimal => d.doubleValue()
-      case d: org.apache.spark.sql.types.Decimal => d.toDouble
-      case o =>
-        throw new IllegalArgumentException(s"$name: expected double, got $o")
+  /** The static method `obj.method` a scalar function calls, and its
+    * result type. */
+  final case class Kernel(obj: AnyRef, method: String, dataType: DataType)
+
+  /** One row of the table. A call's arguments are the column inputs
+    * followed by one literal per `params` entry; those become node fields
+    * (never children) before `node` builds the expression. */
+  private final case class Fn(name: String, params: Seq[(String, DataType)],
+      kernel: Option[Kernel], node: (Seq[Expression], Seq[Any]) => Expression)
+
+  private def scalar(name: String, obj: AnyRef, method: String,
+      dataType: DataType, params: (String, DataType)*): Fn =
+    Fn(name, params, Some(Kernel(obj, method, dataType)), GraftScalar(name, _, _))
+
+  /** A sketch aggregate and, if `merge` names one, its twin over BINARY
+    * blobs; both build the kind from the same params. */
+  private def sketch(name: String, merge: Option[String],
+      params: (String, DataType)*)(kind: Seq[Any] => SketchKind[_ <: AnyRef])
+      : Seq[Fn] =
+    (Seq(name -> false) ++ merge.map(_ -> true)).map { case (n, m) =>
+      Fn(n, params, None, (cs, ps) => SketchAgg(kind(ps), m, cs))
     }
 
-  private val builders: Map[String, Seq[Expression] => Expression] = Map(
-    "graft_shingles" -> { es =>
-      ShingleHashes(es.head, intArg(es(1), "k"), longArg(es(2), "seed"),
-        longArg(es(3), "scale"))
-    },
-    "graft_minimizers" -> { es =>
-      MinimizerHashes(es.head, intArg(es(1), "k"), intArg(es(2), "w"),
-        longArg(es(3), "seed"))
-    },
-    "graft_scaled_ghs" -> { es =>
-      ScaledGramHexes(es.head, intArg(es(1), "k"),
-        arg(es(2), "scaleHex").toString, arg(es(3), "seed").toString)
-    },
-    "graft_syncmers" -> { es =>
-      SyncmerHashes(es.head, intArg(es(1), "k"), intArg(es(2), "s"),
-        intArg(es(3), "t"), longArg(es(4), "seed"))
-    },
-    "graft_token_count" -> { es => TokenCount(es.head) },
-    "graft_fingerprint" -> { es => Fingerprint(es.head) },
-    "graft_minhash" -> { es =>
-      MinHashSignature(es.head, intArg(es(1), "numPerms"), longArg(es(2), "seed"))
-    },
-    "graft_simhash" -> { es => SimHash64(es.head) },
-    "graft_vec_cosine" -> { es => VecCosine(es.head, es(1)) },
-    "graft_vec_dot" -> { es => VecDot(es.head, es(1)) },
-    "graft_quantize8" -> { es => QuantizeVec(es.head) },
-    "graft_vec_cosine_q8" -> { es => VecCosineQ8(es.head, es(1)) },
-    "graft_srp_buckets" -> { es =>
-      SrpBuckets(es.head, intArg(es(1), "tables"), intArg(es(2), "bits"),
-        longArg(es(3), "seed"))
-    },
-    "graft_nearest_centroids" -> { es =>
-      // the centroid matrix arrives as a foldable array<array<float>>
-      // literal (driver-collected, tiny) and is folded once at plan time
-      val ad = arg(es(1), "centroids")
-        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      val cents = Array.tabulate(ad.numElements())(i =>
-        ad.getArray(i).toFloatArray())
-      NearestCentroids(es.head, cents, intArg(es(2), "m"))
-    },
-    "graft_hll_agg" -> { es => HllAgg(es.head, intArg(es(1), "p")) },
-    "graft_hll_merge_agg" -> { es =>
-      HllAgg(es.head, intArg(es(1), "p"), mergeInput = true)
-    },
-    "graft_hll_estimate" -> { es => HllEstimate(es.head) },
-    "graft_hll_union_estimate" -> { es => HllUnionEstimate(es.head, es(1)) },
-    "graft_topk_agg" -> { es => TopKAgg(es.head, intArg(es(1), "capacity")) },
-    "graft_topk_merge_agg" -> { es =>
-      TopKAgg(es.head, intArg(es(1), "capacity"), mergeInput = true)
-    },
-    "graft_topk_weighted_agg" -> { es =>
-      TopKWeightedAgg(es.head, es(1), intArg(es(2), "capacity"))
-    },
-    "graft_topk_items" -> { es => TopKItems(es.head, intArg(es(1), "k")) },
-    "graft_topk_total" -> { es => TopKTotal(es.head) },
-    "graft_topk_dec" -> { es => TopKDec(es.head) },
-    "graft_topk_estimate" -> { es => TopKEstimate(es.head, es(1)) },
-    "graft_bloom_agg" -> { es =>
-      BloomAgg(es.head, longArg(es(1), "items"), doubleArg(es(2), "fpp"),
-        longArg(es(3), "seed"))
-    },
-    "graft_bloom_merge_agg" -> { es =>
-      BloomAgg(es.head, longArg(es(1), "items"), doubleArg(es(2), "fpp"),
-        longArg(es(3), "seed"), mergeInput = true)
-    },
-    "graft_bloom_contains" -> { es => BloomContains(es.head, es(1)) },
-    "graft_bloom_count_contained" -> { es =>
-      BloomCountContained(es.head, es(1))
-    },
-    "graft_bloom_fpp" -> { es => BloomFpp(es.head) },
-    "graft_bloom_items_estimate" -> { es => BloomItemsEstimate(es.head) },
-    "graft_ixf_count_contained" -> { es => IxfCountContained(es.head, es(1)) },
-    "graft_cms_agg" -> { es =>
-      CmsAgg(es.head, doubleArg(es(1), "eps"), doubleArg(es(2), "delta"),
-        longArg(es(3), "seed"))
-    },
-    "graft_cms_merge_agg" -> { es =>
-      CmsAgg(es.head, doubleArg(es(1), "eps"), doubleArg(es(2), "delta"),
-        longArg(es(3), "seed"), mergeInput = true)
-    },
-    "graft_cms_estimate" -> { es => CmsEstimate(es.head, es(1)) },
-    "graft_cms_total" -> { es => CmsTotal(es.head) },
-    "graft_kll_agg" -> { es => KllAgg(es.head, intArg(es(1), "k")) },
-    "graft_kll_merge_agg" -> { es =>
-      KllAgg(es.head, intArg(es(1), "k"), mergeInput = true)
-    },
-    "graft_kll_quantile" -> { es => KllQuantile(es.head, es(1)) },
-    "graft_kll_rank" -> { es => KllRank(es.head, es(1)) },
-    "graft_kll_ks" -> { es => KllKs(es.head, es(1)) },
-    "graft_kll_n" -> { es => KllN(es.head) },
-    "graft_tdigest_agg" -> { es =>
-      TDigestAgg(es.head, doubleArg(es(1), "delta"))
-    },
-    "graft_tdigest_merge_agg" -> { es =>
-      TDigestAgg(es.head, doubleArg(es(1), "delta"), mergeInput = true)
-    },
-    "graft_tdigest_quantile" -> { es => TDigestQuantile(es.head, es(1)) },
-    "graft_tdigest_cdf" -> { es => TDigestCdf(es.head, es(1)) }
-  )
+  private val Hashes = ArrayType(LongType, containsNull = false)
+
+  private val table: Seq[Fn] = Seq(
+    scalar("graft_shingles", TextOps, "shingleHashes", Hashes,
+      "k" -> IntegerType, "seed" -> LongType, "scale" -> LongType),
+    scalar("graft_minimizers", TextOps, "minimizerHashes", Hashes,
+      "k" -> IntegerType, "w" -> IntegerType, "seed" -> LongType),
+    scalar("graft_scaled_ghs", TextOps, "scaledGramHexes",
+      ArrayType(StringType, containsNull = false),
+      "k" -> IntegerType, "scaleHex" -> StringType, "seed" -> StringType),
+    scalar("graft_syncmers", TextOps, "syncmerHashes", Hashes,
+      "k" -> IntegerType, "s" -> IntegerType, "t" -> IntegerType,
+      "seed" -> LongType),
+    scalar("graft_token_count", TextOps, "tokenCount", LongType),
+    scalar("graft_fingerprint", TextOps, "fingerprint", LongType),
+    scalar("graft_minhash", DedupOps, "minhashSignature", Hashes,
+      "numPerms" -> IntegerType, "seed" -> LongType),
+    scalar("graft_simhash", DedupOps, "simhash64", LongType),
+    scalar("graft_srp_buckets", DedupOps, "srpBuckets", Hashes,
+      "tables" -> IntegerType, "bits" -> IntegerType, "seed" -> LongType),
+    scalar("graft_vec_cosine", VecOps, "cosineF", DoubleType),
+    scalar("graft_vec_dot", VecOps, "dotF", DoubleType),
+    scalar("graft_quantize8", VecOps, "quantize8", BinaryType),
+    scalar("graft_vec_cosine_q8", VecOps, "cosineQ8", DoubleType),
+    // the centroid matrix arrives as a foldable array<array<float>> literal
+    // (collected, tiny) and is folded once at plan time
+    Fn("graft_nearest_centroids", Seq("centroids" -> ArrayType(
+      ArrayType(FloatType)), "m" -> IntegerType), None, (cs, ps) => {
+      val ad = ps.head.asInstanceOf[ArrayData]
+      NearestCentroids(cs.head, Array.tabulate(ad.numElements())(i =>
+        ad.getArray(i).toFloatArray()), ps(1).asInstanceOf[Int])
+    }),
+    scalar("graft_hll_estimate", SketchOps, "hllEstimate", DoubleType),
+    scalar("graft_hll_union_estimate", SketchOps, "hllUnionEstimate",
+      DoubleType),
+    scalar("graft_topk_items", SketchOps, "topkItems",
+      ArrayType(StructType(Seq(
+        StructField("item", StringType, nullable = false),
+        StructField("est", LongType, nullable = false))), containsNull = false),
+      "k" -> IntegerType),
+    scalar("graft_topk_total", SketchOps, "topkTotal", LongType),
+    scalar("graft_topk_dec", SketchOps, "topkDec", LongType),
+    scalar("graft_topk_estimate", SketchOps, "topkEstimate", LongType),
+    scalar("graft_bloom_contains", SketchOps, "bloomContains", BooleanType),
+    scalar("graft_bloom_count_contained", SketchOps, "bloomCountContained",
+      LongType),
+    scalar("graft_bloom_fpp", SketchOps, "bloomFpp", DoubleType),
+    scalar("graft_bloom_items_estimate", graft.sketch.Bloom, "estimateItems",
+      DoubleType),
+    scalar("graft_ixf_count_contained", SketchOps, "ixfCountContained",
+      Hashes),
+    scalar("graft_cms_estimate", SketchOps, "cmsEstimate", LongType),
+    scalar("graft_cms_total", SketchOps, "cmsTotal", LongType),
+    scalar("graft_kll_quantile", SketchOps, "kllQuantile", DoubleType),
+    scalar("graft_kll_rank", SketchOps, "kllRank", DoubleType),
+    scalar("graft_kll_ks", SketchOps, "kllKs", DoubleType),
+    scalar("graft_kll_n", SketchOps, "kllCount", LongType),
+    scalar("graft_tdigest_quantile", SketchOps, "tdigestQuantile", DoubleType),
+    scalar("graft_tdigest_cdf", SketchOps, "tdigestCdf", DoubleType)) ++
+    sketch("graft_hll_agg", Some("graft_hll_merge_agg"), "p" -> IntegerType) {
+      case Seq(p: Int) => HllSketch(p)
+    } ++
+    sketch("graft_bloom_agg", Some("graft_bloom_merge_agg"),
+      "items" -> LongType, "fpp" -> DoubleType, "seed" -> LongType) {
+      case Seq(items: Long, fpp: Double, seed: Long) =>
+        BloomSketch(items, fpp, seed)
+    } ++
+    sketch("graft_cms_agg", Some("graft_cms_merge_agg"),
+      "eps" -> DoubleType, "delta" -> DoubleType, "seed" -> LongType) {
+      case Seq(eps: Double, delta: Double, seed: Long) =>
+        CmsSketch(eps, delta, seed)
+    } ++
+    sketch("graft_kll_agg", Some("graft_kll_merge_agg"), "k" -> IntegerType) {
+      case Seq(k: Int) => KllSketch(k)
+    } ++
+    sketch("graft_tdigest_agg", Some("graft_tdigest_merge_agg"),
+      "delta" -> DoubleType) { case Seq(delta: Double) => TDigestSketch(delta) } ++
+    sketch("graft_topk_agg", Some("graft_topk_merge_agg"),
+      "capacity" -> IntegerType) { case Seq(c: Int) => TopKSketch(c) } ++
+    sketch("graft_topk_weighted_agg", None, "capacity" -> IntegerType) {
+      case Seq(c: Int) => TopKWeightedSketch(c)
+    }
+
+  private val byName: Map[String, Fn] = {
+    val m = table.map(f => f.name -> f).toMap
+    require(m.size == table.size, "graft function names must be unique")
+    m
+  }
+
+  /** The kernel of scalar function `name` (see [[GraftScalar]]). */
+  def kernel(name: String): Kernel = byName(name).kernel.get
+
+  /** A literal argument as its parameter's Scala type. */
+  private def literal(e: Expression, param: (String, DataType)): Any = {
+    val (name, t) = param
+    require(e.foldable, s"graft function argument '$name' must be a literal")
+    (t, e.eval()) match {
+      case (IntegerType, i: Int) => i
+      case (IntegerType, l: Long) => l.toInt
+      case (LongType, i: Int) => i.toLong
+      case (LongType, l: Long) => l
+      case (DoubleType, d: Decimal) => d.toDouble
+      case (DoubleType, n: java.lang.Number) => n.doubleValue
+      case (StringType, s) if s != null => s.toString
+      case (_: ArrayType, a: ArrayData) => a
+      case (_, o) => throw new IllegalArgumentException(
+        s"$name: expected ${t.simpleString}, got $o")
+    }
+  }
+
+  private def build(fn: Fn)(es: Seq[Expression]): Expression = {
+    val (inputs, literals) = es.splitAt(es.length - fn.params.length)
+    require(inputs.nonEmpty, s"${fn.name}: too few arguments")
+    fn.node(inputs, literals.zip(fn.params).map { case (e, p) => literal(e, p) })
+  }
 
   /** Idempotent; call once per session before using the facade. */
-  def register(spark: SparkSession): Unit = builders.foreach {
-    case (name, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "built-in")
+  def register(spark: SparkSession): Unit = table.foreach { fn =>
+    spark.sessionState.functionRegistry
+      .createOrReplaceTempFunction(fn.name, build(fn), "built-in")
   }
 
   /** SparkSessionExtensions injection (see graft.GraftExtensions). */
-  def injectInto(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    builders.foreach { case (name, b) =>
-      ext.injectFunction((
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          "graft.GraftFunctions", name),
-        (es: Seq[Expression]) => b(es)))
-    }
+  def injectInto(ext: SparkSessionExtensions): Unit = table.foreach { fn =>
+    ext.injectFunction((FunctionIdentifier(fn.name),
+      new ExpressionInfo("graft.GraftFunctions", fn.name), build(fn)))
+  }
+
+  /** A facade call: `name` must be a table row. */
+  private def call(name: String, inputs: Column*): Column =
+    call_function(byName(name).name, inputs: _*)
 
   // ---- Column facade ------------------------------------------------------
 
@@ -171,62 +189,62 @@ object GraftFunctions {
     * FracMinHash downsampling (keep iff hash <= MAX/scale). */
   def shingles(c: Column, k: Int, scale: Long = 1L,
       seed: Long = DefaultSeed): Column =
-    call_function("graft_shingles", c, lit(k), lit(seed), lit(scale))
+    call("graft_shingles", c, lit(k), lit(seed), lit(scale))
 
   def minimizers(c: Column, k: Int, w: Int, seed: Long = DefaultSeed): Column =
-    call_function("graft_minimizers", c, lit(k), lit(w), lit(seed))
+    call("graft_minimizers", c, lit(k), lit(w), lit(seed))
 
   /** Distinct scaled md5-hex k-gram fingerprints (the engine-portable
     * FracMinHash twin; see Dedup.scaledFingerprints for the contract). */
   def scaled_ghs(c: Column, k: Int, scaleHex: String, seed: String): Column =
-    call_function("graft_scaled_ghs", c, lit(k), lit(scaleHex), lit(seed))
+    call("graft_scaled_ghs", c, lit(k), lit(scaleHex), lit(seed))
   /** Open-syncmer k-gram hashes: keep a k-gram iff its minimal s-gram hash
     * sits at offset t (the reference's default tokenizer mode). */
   def syncmers(c: Column, k: Int, s: Int, t: Int,
       seed: Long = DefaultSeed): Column =
-    call_function("graft_syncmers", c, lit(k), lit(s), lit(t), lit(seed))
+    call("graft_syncmers", c, lit(k), lit(s), lit(t), lit(seed))
 
-  def token_count(c: Column): Column = call_function("graft_token_count", c)
-  def fingerprint(c: Column): Column = call_function("graft_fingerprint", c)
+  def token_count(c: Column): Column = call("graft_token_count", c)
+  def fingerprint(c: Column): Column = call("graft_fingerprint", c)
 
   /** MinHash signature over a shingle-hash array column. */
   def minhash(hashes: Column, numPerms: Int = 128,
       seed: Long = DefaultSeed): Column =
-    call_function("graft_minhash", hashes, lit(numPerms), lit(seed))
-  def simhash(hashes: Column): Column = call_function("graft_simhash", hashes)
+    call("graft_minhash", hashes, lit(numPerms), lit(seed))
+  def simhash(hashes: Column): Column = call("graft_simhash", hashes)
   /** Codegen'd cosine of two array<float> columns (double precision). */
   def vec_cosine(a: Column, b: Column): Column =
-    call_function("graft_vec_cosine", a, b)
+    call("graft_vec_cosine", a, b)
   def vec_dot(a: Column, b: Column): Column =
-    call_function("graft_vec_dot", a, b)
+    call("graft_vec_dot", a, b)
   /** Int8 quantization of an array<float> embedding (4× smaller binary;
     * cosine-compatible — cosine is scale-invariant). */
-  def quantize8(vec: Column): Column = call_function("graft_quantize8", vec)
+  def quantize8(vec: Column): Column = call("graft_quantize8", vec)
   def vec_cosine_q8(a: Column, b: Column): Column =
-    call_function("graft_vec_cosine_q8", a, b)
+    call("graft_vec_cosine_q8", a, b)
   def srp_buckets(vec: Column, tables: Int = 8, bits: Int = 12,
       seed: Long = DefaultSeed): Column =
-    call_function("graft_srp_buckets", vec, lit(tables), lit(bits), lit(seed))
+    call("graft_srp_buckets", vec, lit(tables), lit(bits), lit(seed))
   /** Indices of the m nearest centroids (cosine desc, tie idx asc);
     * `centroids` must be a literal array<array<float>> column. */
   def nearest_centroids(vec: Column, centroids: Column, m: Int): Column =
-    call_function("graft_nearest_centroids", vec, centroids, lit(m))
+    call("graft_nearest_centroids", vec, centroids, lit(m))
 
   /** HLL over any column (hashed internally with xxhash64). */
   def hll_agg(c: Column, p: Int = 14): Column =
-    call_function("graft_hll_agg", xxhash64(c), lit(p))
+    call("graft_hll_agg", xxhash64(c), lit(p))
   /** HLL over an already-hashed LONG column, or an ARRAY<LONG> of hashes
     * (per-row hash sets, e.g. shingles — keeps multi-sketch aggregation
     * one-pass with no explode). */
   def hll_agg_hashed(c: Column, p: Int): Column =
-    call_function("graft_hll_agg", c, lit(p))
+    call("graft_hll_agg", c, lit(p))
   def hll_merge_agg(c: Column, p: Int): Column =
-    call_function("graft_hll_merge_agg", c, lit(p))
-  def hll_estimate(c: Column): Column = call_function("graft_hll_estimate", c)
+    call("graft_hll_merge_agg", c, lit(p))
+  def hll_estimate(c: Column): Column = call("graft_hll_estimate", c)
   /** Ertl estimate of |A ∪ B| from two HLL sketch columns; |A ∩ B| follows
     * by inclusion–exclusion (estimate(a)+estimate(b)-union). */
   def hll_union_estimate(a: Column, b: Column): Column =
-    call_function("graft_hll_union_estimate", a, b)
+    call("graft_hll_union_estimate", a, b)
 
   /** Mergeable Misra–Gries/SpaceSaving heavy-hitter summary over a STRING
     * key column: `capacity` counters give the published eps = 1/(capacity+1)
@@ -234,36 +252,36 @@ object GraftFunctions {
     * count > eps*N present). The one sketch family that ENUMERATES its keys
     * (`topk_items`) instead of answering point queries. */
   def topk_agg(c: Column, capacity: Int): Column =
-    call_function("graft_topk_agg", c.cast("string"), lit(capacity))
+    call("graft_topk_agg", c.cast("string"), lit(capacity))
   def topk_merge_agg(c: Column, capacity: Int): Column =
-    call_function("graft_topk_merge_agg", c, lit(capacity))
+    call("graft_topk_merge_agg", c, lit(capacity))
   /** Weighted variant: each row adds `weight` (positive long — token
     * counts, bytes, cents) to its key; bounds hold with N = total weight.
     * Null/non-positive weights are ignored. */
   def topk_weighted_agg(c: Column, weight: Column, capacity: Int): Column =
-    call_function("graft_topk_weighted_agg", c.cast("string"),
+    call("graft_topk_weighted_agg", c.cast("string"),
       weight.cast("long"), lit(capacity))
   /** Top-k entries as array<struct<item:string, est:long>>, est desc then
     * item asc. */
   def topk_items(sketch: Column, k: Int): Column =
-    call_function("graft_topk_items", sketch, lit(k))
+    call("graft_topk_items", sketch, lit(k))
   def topk_total(sketch: Column): Column =
-    call_function("graft_topk_total", sketch)
+    call("graft_topk_total", sketch)
   /** Undercount certificate: true - est <= topk_dec <= N/(capacity+1). */
-  def topk_dec(sketch: Column): Column = call_function("graft_topk_dec", sketch)
+  def topk_dec(sketch: Column): Column = call("graft_topk_dec", sketch)
   def topk_estimate(sketch: Column, key: Column): Column =
-    call_function("graft_topk_estimate", sketch, key.cast("string"))
+    call("graft_topk_estimate", sketch, key.cast("string"))
 
   def bloom_agg_hashed(c: Column, items: Long, fpp: Double,
       seed: Long = DefaultSeed): Column =
-    call_function("graft_bloom_agg", c, lit(items), lit(fpp), lit(seed))
+    call("graft_bloom_agg", c, lit(items), lit(fpp), lit(seed))
   def bloom_agg(c: Column, items: Long, fpp: Double): Column =
     bloom_agg_hashed(xxhash64(c), items, fpp)
   def bloom_merge_agg(c: Column, items: Long, fpp: Double,
       seed: Long = DefaultSeed): Column =
-    call_function("graft_bloom_merge_agg", c, lit(items), lit(fpp), lit(seed))
+    call("graft_bloom_merge_agg", c, lit(items), lit(fpp), lit(seed))
   def bloom_contains_hashed(sketch: Column, hash: Column): Column =
-    call_function("graft_bloom_contains", sketch, hash)
+    call("graft_bloom_contains", sketch, hash)
   /** Measured routing boundary for scalar sketch blobs (SURVEY §9): below
     * it a binary Literal is optimal (probed in place from the codegen
     * references array, rides the task binary once); above it the Literal's
@@ -282,12 +300,12 @@ object GraftFunctions {
   def bloom_contains(sketch: Column, value: Column): Column =
     bloom_contains_hashed(sketch, xxhash64(value))
   def bloom_count_contained(sketch: Column, hashes: Column): Column =
-    call_function("graft_bloom_count_contained", sketch, hashes)
-  def bloom_fpp(sketch: Column): Column = call_function("graft_bloom_fpp", sketch)
+    call("graft_bloom_count_contained", sketch, hashes)
+  def bloom_fpp(sketch: Column): Column = call("graft_bloom_fpp", sketch)
   def bloom_items_estimate(sketch: Column): Column =
-    call_function("graft_bloom_items_estimate", sketch)
+    call("graft_bloom_items_estimate", sketch)
   def ixf_count_contained(blob: Column, hashes: Column): Column =
-    call_function("graft_ixf_count_contained", blob, hashes)
+    call("graft_ixf_count_contained", blob, hashes)
   /** [[ixf_count_contained]] against a broadcast interleaved blob. */
   def ixf_count_contained_bcast(
       blob: Broadcast[Array[Byte]], hashes: Column): Column =
@@ -296,37 +314,37 @@ object GraftFunctions {
 
   def cms_agg(c: Column, eps: Double = 0.0001, delta: Double = 0.01,
       seed: Long = DefaultSeed): Column =
-    call_function("graft_cms_agg", xxhash64(c), lit(eps), lit(delta), lit(seed))
+    call("graft_cms_agg", xxhash64(c), lit(eps), lit(delta), lit(seed))
   def cms_agg_hashed(c: Column, eps: Double, delta: Double,
       seed: Long = DefaultSeed): Column =
-    call_function("graft_cms_agg", c, lit(eps), lit(delta), lit(seed))
+    call("graft_cms_agg", c, lit(eps), lit(delta), lit(seed))
   def cms_merge_agg(c: Column, eps: Double, delta: Double,
       seed: Long = DefaultSeed): Column =
-    call_function("graft_cms_merge_agg", c, lit(eps), lit(delta), lit(seed))
+    call("graft_cms_merge_agg", c, lit(eps), lit(delta), lit(seed))
   def cms_estimate(sketch: Column, value: Column): Column =
-    call_function("graft_cms_estimate", sketch, xxhash64(value))
+    call("graft_cms_estimate", sketch, xxhash64(value))
   def cms_estimate_hashed(sketch: Column, hash: Column): Column =
-    call_function("graft_cms_estimate", sketch, hash)
-  def cms_total(sketch: Column): Column = call_function("graft_cms_total", sketch)
+    call("graft_cms_estimate", sketch, hash)
+  def cms_total(sketch: Column): Column = call("graft_cms_total", sketch)
 
   def kll_agg(c: Column, k: Int = 200): Column =
-    call_function("graft_kll_agg", c.cast("double"), lit(k))
+    call("graft_kll_agg", c.cast("double"), lit(k))
   def kll_merge_agg(c: Column, k: Int = 200): Column =
-    call_function("graft_kll_merge_agg", c, lit(k))
+    call("graft_kll_merge_agg", c, lit(k))
   def kll_quantile(sketch: Column, q: Double): Column =
-    call_function("graft_kll_quantile", sketch, lit(q))
+    call("graft_kll_quantile", sketch, lit(q))
   def kll_rank(sketch: Column, x: Column): Column =
-    call_function("graft_kll_rank", sketch, x.cast("double"))
+    call("graft_kll_rank", sketch, x.cast("double"))
   def kll_ks(a: Column, b: Column): Column =
-    call_function("graft_kll_ks", a, b)
-  def kll_n(sketch: Column): Column = call_function("graft_kll_n", sketch)
+    call("graft_kll_ks", a, b)
+  def kll_n(sketch: Column): Column = call("graft_kll_n", sketch)
 
   def tdigest_agg(c: Column, delta: Double = 100.0): Column =
-    call_function("graft_tdigest_agg", c.cast("double"), lit(delta))
+    call("graft_tdigest_agg", c.cast("double"), lit(delta))
   def tdigest_merge_agg(c: Column, delta: Double = 100.0): Column =
-    call_function("graft_tdigest_merge_agg", c, lit(delta))
+    call("graft_tdigest_merge_agg", c, lit(delta))
   def tdigest_quantile(sketch: Column, q: Double): Column =
-    call_function("graft_tdigest_quantile", sketch, lit(q))
+    call("graft_tdigest_quantile", sketch, lit(q))
   def tdigest_cdf(sketch: Column, x: Column): Column =
-    call_function("graft_tdigest_cdf", sketch, x.cast("double"))
+    call("graft_tdigest_cdf", sketch, x.cast("double"))
 }

@@ -4,289 +4,192 @@ import graft.sketch._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Mergeable sketch aggregations as Catalyst TypedImperativeAggregates.
-  *
-  * Each aggregate consumes pre-hashed LONG values (the facade wraps user
-  * columns in the codegen'd built-in `xxhash64`) or, in merge mode, BINARY
-  * sketch blobs produced earlier — so partial sketches persisted per
-  * partition can be re-merged without touching raw rows (the north rule's
-  * resume path; reference analogue: temp-file hash spills re-read during the
-  * hierarchical build, /root/reference/src/hixf/build/temp_hash_file.cpp).
-  *
-  * Partial/PartialMerge/Final handling is inherited from Spark: map-side
-  * partial sketches are built per task and only fixed-size byte blobs cross
-  * the shuffle — the plan stays O(groups * sketch_size) regardless of row
-  * count.
-  */
-abstract class BytesSketchAgg
-    extends TypedImperativeAggregate[Array[Byte]]
-    with UnaryLike[Expression] {
-  /** true when the child column already holds serialized sketches. */
-  def mergeInput: Boolean
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
+/** One mergeable sketch family, with its parameters, as [[SketchAgg]] drives
+  * it: an empty buffer, a per-row update, merge, the public blob, and the
+  * form partial buffers take across the shuffle. A kind checks its
+  * parameters when it is constructed, which is when the aggregate is
+  * built: a bad `p` or `eps` fails the plan, not a task. */
+abstract class SketchKind[B <: AnyRef] extends Product with Serializable {
+  def prettyName: String
+  def empty(): B
+  /** Adds one non-null input `v`; `w` is the second input's value (the
+    * weight) for two-input kinds, else null. */
+  def update(buf: B, v: Any, w: Any): B
+  def merge(a: B, b: B): B
+  /** The public dense blob: eval output, and merge-mode input. */
+  def toBytes(buf: B): Array[Byte]
+  def serialize(buf: B): Array[Byte] = toBytes(buf)
+  /** Inverse of [[serialize]]; also reads [[toBytes]] blobs. */
+  def deserialize(bytes: Array[Byte]): B
+}
 
-  protected def updateOne(buf: Array[Byte], hash: Long): Unit
-  protected def mergeInto(a: Array[Byte], b: Array[Byte]): Array[Byte]
-
-  /** Child may be LONG (one hash), ARRAY<LONG> (a pre-tokenized hash set,
-    * e.g. per-turn shingles — avoids an explode that would break the
-    * one-pass multi-sketch aggregation), or BINARY in merge mode. */
-  private lazy val arrayInput =
-    !mergeInput && child.dataType.isInstanceOf[ArrayType]
-
-  final override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else if (mergeInput) mergeInto(buf, v.asInstanceOf[Array[Byte]])
-    else if (arrayInput) {
-      val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      var i = 0
-      val n = arr.numElements()
-      while (i < n) { updateOne(buf, arr.getLong(i)); i += 1 }
-      buf
-    } else { updateOne(buf, v.asInstanceOf[Long]); buf }
+/** HLL, Bloom and count-min: byte-array buffers fed pre-hashed LONGs, or an
+  * ARRAY<LONG> hash set per row (e.g. per-turn shingles — avoids an explode
+  * that would break one-pass multi-sketch aggregation). Partials cross the
+  * shuffle in each kernel's sparse wire form; eval output stays dense. */
+sealed abstract class HashSketch extends SketchKind[Array[Byte]] {
+  protected def add(buf: Array[Byte], hash: Long): Unit
+  final def update(buf: Array[Byte], v: Any, w: Any): Array[Byte] = {
+    v match {
+      case arr: ArrayData =>
+        var i = 0
+        val n = arr.numElements()
+        while (i < n) { add(buf, arr.getLong(i)); i += 1 }
+      case hash => add(buf, hash.asInstanceOf[Long])
+    }
+    buf
   }
-  final override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    mergeInto(a, b)
-  final override def eval(buf: Array[Byte]): Any = buf
-  // serialize/deserialize cross ONLY the shuffle boundary — eval output
-  // (the public artifact format) is always the dense versioned blob.
-  // Subclasses may substitute a compact wire form (see CmsAgg).
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
+  final def toBytes(buf: Array[Byte]): Array[Byte] = buf
 }
 
 /** HyperLogLog distinct-cardinality sketch; p in [4,18]. */
-case class HllAgg(
-    child: Expression,
-    p: Int,
-    mergeInput: Boolean = false,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends BytesSketchAgg {
-  override def createAggregationBuffer(): Array[Byte] = Hll.empty(p)
-  override protected def updateOne(buf: Array[Byte], hash: Long): Unit =
-    Hll.update(buf, hash)
-  override protected def mergeInto(a: Array[Byte], b: Array[Byte]) =
-    Hll.merge(a, b)
-  // low-cardinality partials are mostly zero registers; ship them sparse
+final case class HllSketch(p: Int) extends HashSketch {
+  Hll.check(p)
+  def prettyName: String = "graft_hll_agg"
+  def empty(): Array[Byte] = Hll.empty(p)
+  protected def add(buf: Array[Byte], hash: Long): Unit = Hll.update(buf, hash)
+  def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = Hll.merge(a, b)
   override def serialize(buf: Array[Byte]): Array[Byte] = Hll.toWire(buf)
-  override def deserialize(bytes: Array[Byte]): Array[Byte] =
-    Hll.fromWire(bytes)
-  override def withNewMutableAggBufferOffset(o: Int): HllAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): HllAgg =
-    copy(child = c)
-  override def prettyName: String = "graft_hll_agg"
+  def deserialize(bytes: Array[Byte]): Array[Byte] = Hll.fromWire(bytes)
 }
 
-/** Partitioned Bloom filter; sized from (expectedItems, fpp). */
-case class BloomAgg(
-    child: Expression,
-    expectedItems: Long,
-    fpp: Double,
-    seed: Long,
-    mergeInput: Boolean = false,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends BytesSketchAgg {
-  override def createAggregationBuffer(): Array[Byte] =
-    Bloom.empty(expectedItems, fpp, seed)
-  override protected def updateOne(buf: Array[Byte], hash: Long): Unit =
-    Bloom.update(buf, hash)
-  override protected def mergeInto(a: Array[Byte], b: Array[Byte]) =
-    Bloom.merge(a, b)
-  // few-item partials have sparse bit-bytes; ship them sparse
+/** Partitioned Bloom filter sized from (expectedItems, fpp). */
+final case class BloomSketch(expectedItems: Long, fpp: Double, seed: Long)
+    extends HashSketch {
+  Bloom.check(expectedItems, fpp)
+  def prettyName: String = "graft_bloom_agg"
+  def empty(): Array[Byte] = Bloom.empty(expectedItems, fpp, seed)
+  protected def add(buf: Array[Byte], hash: Long): Unit = Bloom.update(buf, hash)
+  def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = Bloom.merge(a, b)
   override def serialize(buf: Array[Byte]): Array[Byte] = Bloom.toWire(buf)
-  override def deserialize(bytes: Array[Byte]): Array[Byte] =
-    Bloom.fromWire(bytes)
-  override def withNewMutableAggBufferOffset(o: Int): BloomAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): BloomAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): BloomAgg =
-    copy(child = c)
-  override def prettyName: String = "graft_bloom_agg"
+  def deserialize(bytes: Array[Byte]): Array[Byte] = Bloom.fromWire(bytes)
 }
 
-/** Count-min sketch with eps–delta sizing. */
-case class CmsAgg(
-    child: Expression,
-    eps: Double,
-    delta: Double,
-    seed: Long,
-    mergeInput: Boolean = false,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends BytesSketchAgg {
-  override def createAggregationBuffer(): Array[Byte] =
-    CountMin.empty(eps, delta, seed)
-  override protected def updateOne(buf: Array[Byte], hash: Long): Unit =
+/** Count-min sketch with eps–delta sizing. Partial buffers are ~99.9% zeros
+  * at small key cardinalities and ~1 MB dense, so they ship sparse
+  * (CountMin.toWire; never lossy, dense fallback when saturated). */
+final case class CmsSketch(eps: Double, delta: Double, seed: Long)
+    extends HashSketch {
+  CountMin.dims(eps, delta)
+  def prettyName: String = "graft_cms_agg"
+  def empty(): Array[Byte] = CountMin.empty(eps, delta, seed)
+  protected def add(buf: Array[Byte], hash: Long): Unit =
     CountMin.update(buf, hash, 1L)
-  override protected def mergeInto(a: Array[Byte], b: Array[Byte]) =
-    CountMin.merge(a, b)
-  // partial CMS buffers are ~99.9% zeros at small key cardinalities and
-  // ~1 MB dense — ship them sparse across the shuffle (CountMin.toWire;
-  // never-lossy, dense fallback for saturated sketches)
-  override def serialize(buf: Array[Byte]): Array[Byte] =
-    CountMin.toWire(buf)
-  override def deserialize(bytes: Array[Byte]): Array[Byte] =
-    CountMin.fromWire(bytes)
-  override def withNewMutableAggBufferOffset(o: Int): CmsAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CmsAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): CmsAgg =
-    copy(child = c)
-  override def prettyName: String = "graft_cms_agg"
+  def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = CountMin.merge(a, b)
+  override def serialize(buf: Array[Byte]): Array[Byte] = CountMin.toWire(buf)
+  def deserialize(bytes: Array[Byte]): Array[Byte] = CountMin.fromWire(bytes)
 }
 
-/** KLL quantile sketch over DOUBLE values (or BINARY sketches in merge mode). */
-case class KllAgg(
-    child: Expression,
-    k: Int,
-    mergeInput: Boolean = false,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Kll]
-    with UnaryLike[Expression] {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): Kll = Kll.empty(k)
-  override def update(buf: Kll, input: InternalRow): Kll = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else if (mergeInput) buf.merge(Kll.fromBytes(v.asInstanceOf[Array[Byte]]))
-    else { buf.update(v.asInstanceOf[Double]); buf }
+/** KLL quantile sketch over DOUBLE values. */
+final case class KllSketch(k: Int) extends SketchKind[Kll] {
+  Kll.check(k)
+  def prettyName: String = "graft_kll_agg"
+  def empty(): Kll = Kll.empty(k)
+  def update(buf: Kll, v: Any, w: Any): Kll = {
+    buf.update(v.asInstanceOf[Double]); buf
   }
-  override def merge(a: Kll, b: Kll): Kll = a.merge(b)
-  override def eval(buf: Kll): Any = buf.toBytes
-  override def serialize(buf: Kll): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): Kll = Kll.fromBytes(bytes)
-  override def withNewMutableAggBufferOffset(o: Int): KllAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KllAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): KllAgg =
-    copy(child = c)
-  override def prettyName: String = "graft_kll_agg"
+  def merge(a: Kll, b: Kll): Kll = a.merge(b)
+  def toBytes(buf: Kll): Array[Byte] = buf.toBytes
+  def deserialize(bytes: Array[Byte]): Kll = Kll.fromBytes(bytes)
 }
 
-/** Misra–Gries/SpaceSaving heavy-hitter top-k summary over STRING keys (or
-  * BINARY sketches in merge mode). Unlike the hash-consuming sketches this
-  * one stores the KEYS themselves — enumeration (`topk_items`) is the point.
-  * For weighted contributions see TopKWeightedAgg. */
-case class TopKAgg(
-    child: Expression,
-    capacity: Int,
-    mergeInput: Boolean = false,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[SpaceSaving]
-    with UnaryLike[Expression] {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): SpaceSaving = SpaceSaving.empty(capacity)
-  override def update(buf: SpaceSaving, input: InternalRow): SpaceSaving = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else if (mergeInput)
-      buf.merge(SpaceSaving.fromBytes(v.asInstanceOf[Array[Byte]]))
-    else {
-      buf.update(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString)
-      buf
-    }
+/** Merging t-digest over DOUBLE values. */
+final case class TDigestSketch(delta: Double) extends SketchKind[TDigest] {
+  TDigest.check(delta)
+  def prettyName: String = "graft_tdigest_agg"
+  def empty(): TDigest = TDigest.empty(delta)
+  def update(buf: TDigest, v: Any, w: Any): TDigest = {
+    buf.update(v.asInstanceOf[Double]); buf
   }
-  override def merge(a: SpaceSaving, b: SpaceSaving): SpaceSaving = a.merge(b)
-  override def eval(buf: SpaceSaving): Any = buf.toBytes
-  override def serialize(buf: SpaceSaving): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): SpaceSaving =
+  def merge(a: TDigest, b: TDigest): TDigest = a.merge(b)
+  def toBytes(buf: TDigest): Array[Byte] = buf.toBytes
+  def deserialize(bytes: Array[Byte]): TDigest = TDigest.fromBytes(bytes)
+}
+
+/** Misra–Gries/SpaceSaving heavy hitters over STRING keys. Unlike the
+  * hash-consuming sketches it stores the KEYS themselves — enumeration
+  * (`topk_items`) is the point. */
+sealed abstract class SpaceSavingSketch(capacity: Int)
+    extends SketchKind[SpaceSaving] {
+  SpaceSaving.check(capacity)
+  final def empty(): SpaceSaving = SpaceSaving.empty(capacity)
+  final def merge(a: SpaceSaving, b: SpaceSaving): SpaceSaving = a.merge(b)
+  final def toBytes(buf: SpaceSaving): Array[Byte] = buf.toBytes
+  final def deserialize(bytes: Array[Byte]): SpaceSaving =
     SpaceSaving.fromBytes(bytes)
-  override def withNewMutableAggBufferOffset(o: Int): TopKAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): TopKAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): TopKAgg =
-    copy(child = c)
-  override def prettyName: String = "graft_topk_agg"
 }
 
-/** Weighted SpaceSaving: each row contributes `weight` (a positive LONG —
-  * token counts, bytes, revenue cents) to its key instead of 1, so the
-  * summary enumerates the keys carrying the most MASS. The Misra–Gries
-  * bounds hold verbatim with N = total weight W: no overcount, undercount
-  * <= W/(capacity+1), every key with true weight above that present. Rows
-  * with null or non-positive weight are ignored (a negative increment
-  * would break the no-overcount certificate). */
-case class TopKWeightedAgg(
-    left: Expression,
-    right: Expression,
-    capacity: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[SpaceSaving]
-    with BinaryLike[Expression] {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): SpaceSaving = SpaceSaving.empty(capacity)
-  override def update(buf: SpaceSaving, input: InternalRow): SpaceSaving = {
-    val k = left.eval(input)
-    val w = right.eval(input)
-    if (k != null && w != null && w.asInstanceOf[Long] > 0L)
-      buf.update(
-        k.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString,
-        w.asInstanceOf[Long])
+final case class TopKSketch(capacity: Int)
+    extends SpaceSavingSketch(capacity) {
+  def prettyName: String = "graft_topk_agg"
+  def update(buf: SpaceSaving, v: Any, w: Any): SpaceSaving = {
+    buf.update(v.asInstanceOf[UTF8String].toString); buf
+  }
+}
+
+/** Weighted SpaceSaving: each row adds `weight` (a positive LONG — token
+  * counts, bytes, revenue cents) to its key instead of 1, so the summary
+  * enumerates the keys carrying the most MASS. The Misra–Gries bounds hold
+  * verbatim with N = total weight W. Rows with null or non-positive weight
+  * are ignored (a negative increment would break the no-overcount
+  * certificate). */
+final case class TopKWeightedSketch(capacity: Int)
+    extends SpaceSavingSketch(capacity) {
+  def prettyName: String = "graft_topk_weighted_agg"
+  def update(buf: SpaceSaving, v: Any, w: Any): SpaceSaving = {
+    if (w != null && w.asInstanceOf[Long] > 0L)
+      buf.update(v.asInstanceOf[UTF8String].toString, w.asInstanceOf[Long])
     buf
   }
-  override def merge(a: SpaceSaving, b: SpaceSaving): SpaceSaving = a.merge(b)
-  override def eval(buf: SpaceSaving): Any = buf.toBytes
-  override def serialize(buf: SpaceSaving): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): SpaceSaving =
-    SpaceSaving.fromBytes(bytes)
-  override def withNewMutableAggBufferOffset(o: Int): TopKWeightedAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): TopKWeightedAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): TopKWeightedAgg =
-    copy(left = l, right = r)
-  override def prettyName: String = "graft_topk_weighted_agg"
 }
 
-/** Merging t-digest over DOUBLE values (or BINARY sketches in merge mode). */
-case class TDigestAgg(
-    child: Expression,
-    delta: Double,
-    mergeInput: Boolean = false,
+/** Every graft sketch aggregate: one Catalyst TypedImperativeAggregate
+  * driven by its [[SketchKind]]. Inputs are the kind's values (hashes,
+  * doubles, keys, and a weight), or with `mergeInput` the BINARY blobs
+  * built earlier — so partial sketches persisted per partition re-merge
+  * without touching raw rows. Rows whose first input is null are skipped.
+  *
+  * Partial/PartialMerge/Final handling is inherited from Spark: map-side
+  * partial sketches are built per task and only byte blobs cross the
+  * shuffle — the plan stays O(groups * sketch_size) regardless of row
+  * count. */
+case class SketchAgg[B <: AnyRef](
+    kind: SketchKind[B],
+    mergeInput: Boolean,
+    children: Seq[Expression],
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[TDigest]
-    with UnaryLike[Expression] {
+    extends TypedImperativeAggregate[B] {
+  @transient private lazy val item = children.head
+  @transient private lazy val weight = children.lift(1).orNull
+
+  override def prettyName: String = kind.prettyName
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = false
-  override def createAggregationBuffer(): TDigest = TDigest.empty(delta)
-  override def update(buf: TDigest, input: InternalRow): TDigest = {
-    val v = child.eval(input)
+  override def createAggregationBuffer(): B = kind.empty()
+  override def update(buf: B, row: InternalRow): B = {
+    val v = item.eval(row)
     if (v == null) buf
     else if (mergeInput)
-      buf.merge(TDigest.fromBytes(v.asInstanceOf[Array[Byte]]))
-    else { buf.update(v.asInstanceOf[Double]); buf }
+      kind.merge(buf, kind.deserialize(v.asInstanceOf[Array[Byte]]))
+    else kind.update(buf, v, if (weight == null) null else weight.eval(row))
   }
-  override def merge(a: TDigest, b: TDigest): TDigest = a.merge(b)
-  override def eval(buf: TDigest): Any = buf.toBytes
-  override def serialize(buf: TDigest): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): TDigest = TDigest.fromBytes(bytes)
-  override def withNewMutableAggBufferOffset(o: Int): TDigestAgg =
+  override def merge(a: B, b: B): B = kind.merge(a, b)
+  override def eval(buf: B): Any = kind.toBytes(buf)
+  // serialize/deserialize cross ONLY the shuffle boundary
+  override def serialize(buf: B): Array[Byte] = kind.serialize(buf)
+  override def deserialize(bytes: Array[Byte]): B = kind.deserialize(bytes)
+  override def withNewMutableAggBufferOffset(o: Int): SketchAgg[B] =
     copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): TDigestAgg =
+  override def withNewInputAggBufferOffset(o: Int): SketchAgg[B] =
     copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): TDigestAgg =
-    copy(child = c)
-  override def prettyName: String = "graft_tdigest_agg"
+  override protected def withNewChildrenInternal(
+      cs: IndexedSeq[Expression]): SketchAgg[B] = copy(children = cs)
+  override protected def stringArgs: Iterator[Any] =
+    children.iterator ++ kind.productIterator ++
+      Iterator(mergeInput, mutableAggBufferOffset, inputAggBufferOffset)
 }

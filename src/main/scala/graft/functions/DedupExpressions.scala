@@ -1,10 +1,7 @@
 package graft.functions
 
 import graft.sketch.Bytes
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 
 /** Runtime for MinHash / SimHash document fingerprints over shingle-hash
   * arrays (static forwarders for generated code).
@@ -128,45 +125,4 @@ object DedupOps {
     }
     new GenericArrayData(out)
   }
-}
-
-/** MinHash signature (array<long>) of a shingle-hash array. */
-case class MinHashSignature(child: Expression, numPerms: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    DedupOps.minhashSignature(v.asInstanceOf[ArrayData], numPerms, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.DedupOps.minhashSignature($c, $numPerms, ${seed}L)")
-  override protected def withNewChildInternal(c: Expression): MinHashSignature =
-    copy(child = c)
-  override def prettyName: String = "graft_minhash"
-}
-
-/** 64-bit SimHash of a shingle-hash array. */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    DedupOps.simhash64(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.DedupOps.simhash64($c)")
-  override protected def withNewChildInternal(c: Expression): SimHash64 =
-    copy(child = c)
-  override def prettyName: String = "graft_simhash"
-}
-
-/** Signed-random-projection LSH bucket ids (one per table) for an
-  * array<float> embedding. */
-case class SrpBuckets(child: Expression, tables: Int, bits: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    DedupOps.srpBuckets(v.asInstanceOf[ArrayData], tables, bits, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.DedupOps.srpBuckets($c, $tables, $bits, ${seed}L)")
-  override protected def withNewChildInternal(c: Expression): SrpBuckets =
-    copy(child = c)
-  override def prettyName: String = "graft_srp_buckets"
 }

@@ -137,59 +137,6 @@ object VecOps {
   }
 }
 
-/** Cosine similarity of two array<float> columns (double result). */
-case class VecCosine(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VecOps.cosineF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.VecOps.cosineF($a, $b)")
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): VecCosine = copy(left = l, right = r)
-  override def prettyName: String = "graft_vec_cosine"
-}
-
-/** Dot product of two array<float> columns (double result). */
-case class VecDot(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VecOps.dotF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VecOps.dotF($a, $b)")
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): VecDot = copy(left = l, right = r)
-  override def prettyName: String = "graft_vec_dot"
-}
-
-/** Int8 quantization of an array<float> column (binary result, 4× smaller;
-  * cosine-compatible without a stored scale). */
-case class QuantizeVec(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(v: Any): Any =
-    VecOps.quantize8(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VecOps.quantize8($c)")
-  override protected def withNewChildInternal(c: Expression): QuantizeVec =
-    copy(child = c)
-  override def prettyName: String = "graft_quantize8"
-}
-
-/** Cosine of two int8-quantized (binary) vectors. */
-case class VecCosineQ8(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VecOps.cosineQ8(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VecOps.cosineQ8($a, $b)")
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): VecCosineQ8 = copy(left = l, right = r)
-  override def prettyName: String = "graft_vec_cosine_q8"
-}
-
 /** Top-`m` nearest-centroid indices of an array<float> column against a
   * small constant centroid matrix (driver-collected, referenced as a
   * constant object in generated code). Replaces the corpus×centroids

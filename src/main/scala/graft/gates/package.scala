@@ -35,6 +35,10 @@ package object gates {
 
   /** Memory-sink sequence for streaming gates (unique name per run). */
   private val streamGateSeq = new java.util.concurrent.atomic.AtomicInteger
+  /** Held for a drain's set/drain/restore of the session conf: two drains
+    * that overlapped would otherwise each restore the value the other set,
+    * leaving the session with a drain's temporary setting. */
+  private val drainLock = new Object
 
   /** Feed `rows` through the streaming query `sink` builds over a
     * MemoryStream as three genuine micro-batches, then each `tail` row as
@@ -61,15 +65,17 @@ package object gates {
     // first one's registration
     val name = s"graft_stream_gate_${streamGateSeq.incrementAndGet()}"
     val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, math.min(8, s.sparkContext.defaultParallelism).toString)
-    try {
-      val q = sink(mem.toDF()).queryName(name).start()
+    drainLock.synchronized {
+      val prev = s.conf.get(key)
+      s.conf.set(key, math.min(8, s.sparkContext.defaultParallelism).toString)
       try {
-        (rows.grouped(math.max(1, rows.length / 3 + 1)) ++ tail.map(Seq(_)))
-          .foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-      } finally q.stop()
-    } finally s.conf.set(key, prev)
+        val q = sink(mem.toDF()).queryName(name).start()
+        try {
+          (rows.grouped(math.max(1, rows.length / 3 + 1)) ++ tail.map(Seq(_)))
+            .foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+        } finally q.stop()
+      } finally s.conf.set(key, prev)
+    }
     name
   }
 }

@@ -383,7 +383,7 @@ object Dedup {
     // r6: ONE codegen'd kernel (graft_scaled_ghs) replaces the
     // explode(transform(sequence))/md5/substring-threshold/distinct chain —
     // the higher-order functions were CodegenFallback and cost 10-15 CPU-s
-    // per corpus pass (guide §1.2 per-task work; VecCosine precedent). The
+    // per corpus pass (guide §1.2 per-task work; graft_vec_cosine precedent). The
     // kernel emits each document's DISTINCT kept fingerprints, which equals
     // the old global (id, gh) distinct under the index family's one-row-
     // per-document-id contract (append's idempotence guard already

@@ -382,7 +382,7 @@ object Sampling {
     * Rows with null or non-positive weight are EXCLUDED from the sample
     * (enforced — a zero weight yields priority Infinity and a negative
     * one a negative priority that silently wins every slot; same posture
-    * as TopKWeightedAgg, which ignores non-positive weights).
+    * as topk_weighted_agg, which ignores non-positive weights).
     * Same scale shape as bottomK: WindowGroupLimit prunes to ≤ k rows per
     * stratum per partition before the exchange. */
   def weightedBottomK(

@@ -34,17 +34,34 @@ object Bloom {
     math.ceil(-n * k / math.log1p(-math.exp(math.log(fpp) / k))).toLong
   }
 
-  def empty(numItems: Long, fpp: Double, seed: Long): Array[Byte] = {
+  /** (k, sliceBits) for `numItems` at false-positive rate `fpp`. */
+  private def dims(numItems: Long, fpp: Double): (Int, Long) = {
+    require(fpp > 0 && fpp < 1, s"bloom fpp out of range (0, 1): $fpp")
     val k = optimalK(fpp)
-    val slice = math.max(8L, bitsFor(numItems, fpp, k) / k + 1)
+    (k, math.max(8L, bitsFor(numItems, fpp, k) / k + 1))
+  }
+
+  /** Rejects parameters `empty` cannot build a filter for. */
+  def check(numItems: Long, fpp: Double): Unit = {
+    val (k, slice) = dims(numItems, fpp)
+    checkSize(k, slice)
+  }
+
+  def empty(numItems: Long, fpp: Double, seed: Long): Array[Byte] = {
+    val (k, slice) = dims(numItems, fpp)
     emptyRaw(k, slice, seed)
   }
 
-  def emptyRaw(k: Int, sliceBits: Long, seed: Long): Array[Byte] = {
+  private def checkSize(k: Int, sliceBits: Long): Long = {
     require(k >= 1 && k <= 64, s"bloom k out of range: $k")
-    val totalBits = k.toLong * sliceBits
-    require(totalBits <= Int.MaxValue.toLong * 8, "bloom too large")
-    val a = new Array[Byte](HEADER + ((totalBits + 7) / 8).toInt)
+    val bytes = HEADER + (k.toLong * sliceBits + 7) / 8
+    require(bytes <= Bytes.MaxArrayBytes,
+      s"bloom items/fpp need a $bytes-byte filter, over the array limit")
+    bytes
+  }
+
+  def emptyRaw(k: Int, sliceBits: Long, seed: Long): Array[Byte] = {
+    val a = new Array[Byte](checkSize(k, sliceBits).toInt)
     a(0) = TYPE; a(1) = VER
     Bytes.putInt(a, 2, k)
     Bytes.putLong(a, 6, sliceBits)

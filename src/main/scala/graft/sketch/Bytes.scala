@@ -8,6 +8,10 @@ package graft.sketch
   * blobs (/root/reference/src/main/index.hpp:208-244).
   */
 object Bytes {
+  /** Largest byte array a sketch may allocate (the JVM's own limit, less
+    * the words some VMs reserve; the same bound Spark rounds arrays to). */
+  val MaxArrayBytes: Long = Int.MaxValue - 15L
+
   @inline def putInt(a: Array[Byte], off: Int, v: Int): Unit = {
     a(off) = (v >>> 24).toByte
     a(off + 1) = (v >>> 16).toByte

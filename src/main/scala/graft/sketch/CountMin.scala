@@ -19,11 +19,17 @@ object CountMin {
   val VER: Byte = 1
   val HEADER = 26
 
+  /** (depth, width) for (eps, delta); rejects a table over the array
+    * limit, so it doubles as the parameter check. */
   def dims(eps: Double, delta: Double): (Int, Int) = {
-    require(eps > 0 && eps < 1 && delta > 0 && delta < 1)
+    require(eps > 0 && eps < 1, s"cms eps out of range (0, 1): $eps")
+    require(delta > 0 && delta < 1, s"cms delta out of range (0, 1): $delta")
     val depth = math.max(1, math.ceil(math.log(1.0 / delta)).toInt)
-    val width = math.max(2, math.ceil(math.E / eps).toInt)
-    (depth, width)
+    val width = math.max(2.0, math.ceil(math.E / eps))
+    require(HEADER + depth * width * 8 <= Bytes.MaxArrayBytes,
+      s"cms eps=$eps delta=$delta need a ${depth}x${width.toLong} table, " +
+        "over the array limit")
+    (depth, width.toInt)
   }
 
   def empty(eps: Double, delta: Double, seed: Long): Array[Byte] = {
@@ -32,7 +38,10 @@ object CountMin {
   }
 
   def emptyRaw(depth: Int, width: Int, seed: Long): Array[Byte] = {
-    val a = new Array[Byte](HEADER + depth * width * 8)
+    val bytes = HEADER + depth.toLong * width * 8
+    require(bytes <= Bytes.MaxArrayBytes,
+      s"cms ${depth}x$width table is over the array limit")
+    val a = new Array[Byte](bytes.toInt)
     a(0) = TYPE; a(1) = VER
     Bytes.putInt(a, 2, depth)
     Bytes.putInt(a, 6, width)

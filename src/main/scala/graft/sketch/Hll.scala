@@ -18,8 +18,10 @@ object Hll {
 
   def m(p: Int): Int = 1 << p
 
+  def check(p: Int): Unit = require(p >= 4 && p <= 18, s"hll p out of range: $p")
+
   def empty(p: Int): Array[Byte] = {
-    require(p >= 4 && p <= 18, s"hll p out of range: $p")
+    check(p)
     val a = new Array[Byte](HEADER + m(p))
     a(0) = TYPE; a(1) = VER; a(2) = p.toByte
     a

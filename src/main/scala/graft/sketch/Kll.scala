@@ -16,7 +16,7 @@ import scala.collection.mutable.ArrayBuffer
   * we use the conservative epsilon ≈ 2.296/k (datasketches constant).
   */
 final class Kll(val k: Int) extends Serializable {
-  require(k >= 8 && k <= 65535, s"kll k out of range: $k")
+  Kll.check(k)
   var n: Long = 0L
   var minV: Double = Double.PositiveInfinity
   var maxV: Double = Double.NegativeInfinity
@@ -169,6 +169,9 @@ object Kll {
   val TYPE: Byte = 4
   val VER: Byte = 1
   val HEADER = 35
+
+  def check(k: Int): Unit =
+    require(k >= 8 && k <= 65535, s"kll k out of range: $k")
 
   def empty(k: Int): Kll = new Kll(k)
 

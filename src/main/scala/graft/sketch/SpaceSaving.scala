@@ -115,9 +115,11 @@ object SpaceSaving {
   val TYPE: Byte = 6
   val VER: Byte = 1
 
+  def check(capacity: Int): Unit = require(capacity >= 1 && capacity <= 1000000,
+    s"spacesaving capacity out of range: $capacity")
+
   def empty(capacity: Int): SpaceSaving = {
-    require(capacity >= 1 && capacity <= 1000000,
-      s"spacesaving capacity out of range: $capacity")
+    check(capacity)
     new SpaceSaving(capacity, 0L, 0L, scala.collection.mutable.HashMap.empty)
   }
 

@@ -17,7 +17,7 @@ package graft.sketch
   * [means double*][weights double*].
   */
 final class TDigest(val delta: Double) extends Serializable {
-  require(delta >= 10 && delta <= 10000, s"tdigest delta out of range: $delta")
+  TDigest.check(delta)
   private[sketch] var means = new DoubleBuf
   private[sketch] var weights = new DoubleBuf
   private[sketch] val bufX = new DoubleBuf
@@ -201,6 +201,9 @@ object TDigest {
   val TYPE: Byte = 5
   val VER: Byte = 1
   val HEADER = 38
+
+  def check(delta: Double): Unit = require(delta >= 10 && delta <= 10000,
+    s"tdigest delta out of range: $delta")
 
   def empty(delta: Double): TDigest = new TDigest(delta)
 

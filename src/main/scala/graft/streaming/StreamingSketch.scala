@@ -44,7 +44,7 @@ object StreamingSketch {
 
   /** Per-window distribution-drift alarm vs a FROZEN reference: one KLL
     * blob per event-time window in the state store, compared to the
-    * reference blob row-locally at emit (the [[graft.functions.KllKs]]
+    * reference blob row-locally at emit (the `graft_kll_ks`
     * expression; the reference rides as one small literal — k·8B-scale).
     * This is the continuous form of [[graft.operators.Drift.ksDistance]]:
     * "did this hour's turn-length distribution move from the accepted
@@ -60,7 +60,7 @@ object StreamingSketch {
       threshold: Double = 0.2): DataFrame = {
     val ks = kll_ks(col("kll"), lit(referenceKll))
     // drop null samples BEFORE the window agg: kll_agg skips nulls, so an
-    // all-null window would emit an n=0 blob and KllKs (which requires
+    // all-null window would emit an n=0 blob and graft_kll_ks (which requires
     // both sketches non-empty) would crash the continuously-running drift
     // monitor at emit time — a data-quality blip must not kill the query.
     // Identical output for windows with any non-null sample.

@@ -3,7 +3,9 @@ package graft
 import graft.GraftFunctions._
 import graft.operators.SaltedAgg
 import graft.sources.Transcripts
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,7 +19,32 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestBase {
       .find(_.getName.contains("injectedFunctions")).get
     field.setAccessible(true)
     val injected = field.get(ext).asInstanceOf[scala.collection.Seq[_]]
-    assert(injected.size >= 25, s"only ${injected.size} functions injected")
+      .map(_.asInstanceOf[Product].productElement(0)
+        .asInstanceOf[FunctionIdentifier].funcName).toSet
+    val registered = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_")).toSet
+    assert(injected == registered)
+    // every name the Column facade calls is one of them: invoke each facade
+    // method and read the function names off the column it builds (the
+    // *_bcast methods build their node directly, not by name)
+    val called = GraftFunctions.getClass.getMethods.toSeq
+      .filter(m => m.getReturnType == classOf[Column] &&
+        !m.getParameterTypes.contains(classOf[Broadcast[_]]))
+      .flatMap { m =>
+        val args = m.getParameterTypes.map {
+          case c if c == classOf[Column] => col("c")
+          case c if c == classOf[SparkSession] => spark
+          case c if c == classOf[Array[Byte]] => Array[Byte](0)
+          case c if c == classOf[String] => "s"
+          case java.lang.Integer.TYPE => Int.box(1)
+          case java.lang.Long.TYPE => Long.box(1L)
+          case java.lang.Double.TYPE => Double.box(0.5)
+        }
+        val c = m.invoke(GraftFunctions, args: _*).asInstanceOf[Column]
+        "graft_\\w+(?=\\()".r.findAllIn(c.toString)
+      }.toSet
+    assert(called.size > 40, called)
+    assert(called.subsetOf(injected), called -- injected)
   }
 
   test("registered functions work from plain SQL") {
